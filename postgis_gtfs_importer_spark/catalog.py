@@ -545,8 +545,10 @@ class PsqlCatalog:
         lock (A17), transaction bracket (A18), record INSERT/DELETE.
       * mgmt        — one-shot autocommit psql calls: CREATE/DROP
         DATABASE outside any transaction (A19, import.js:115-118).
+        Read-only catalog scans (``list_databases``) run on ``_meta``.
       * loaders     — per-partition psql COPY children, executor-side
-        (C17/C18 via sinks.pg_copy.copy_dataframe_psql).
+        (C17/C18 via sinks.pg_copy.copy_lines_psql); the number of
+        streams follows the table's size, capped at ``load_partitions``.
 
     Spatial DDL (C6) is feature-gated on the postgis extension being
     available server-side; PKs and partition-pruning indexes always run.
@@ -646,14 +648,13 @@ class PsqlCatalog:
     # -- DB lifecycle (A10/A14/A19) -------------------------------------------
 
     def list_databases(self, prefix: str) -> list[str]:
+        # a read-only catalog scan: the held session serves it, inside or
+        # outside the lock transaction, without a psql child per tick
         q = prefix.replace("'", "''")
-        rows = self._once(
-            self.meta_db,
-            [
-                f"""SELECT datname FROM pg_catalog.pg_database
-                    WHERE substring(datname FOR {len(prefix)}) = '{q}'
-                    ORDER BY datname ASC"""
-            ],
+        rows = self._meta.execute(
+            f"""SELECT datname FROM pg_catalog.pg_database
+                WHERE substring(datname FOR {len(prefix)}) = '{q}'
+                ORDER BY datname ASC"""
         )
         # A11: never treat the meta DB itself as a snapshot
         return [r[0] for r in rows if r[0] != self.meta_db]
@@ -667,10 +668,9 @@ class PsqlCatalog:
     # -- snapshot sink (C17/C18) ----------------------------------------------
 
     def _postgis_available(self) -> bool:
-        rows = self._once(
-            self.meta_db,
-            ["SELECT count(*) FROM pg_available_extensions"
-             " WHERE name = 'postgis'"],
+        rows = self._meta.execute(
+            "SELECT count(*) FROM pg_available_extensions"
+            " WHERE name = 'postgis'"
         )
         return bool(rows and rows[0][0] != "0")
 
@@ -691,36 +691,43 @@ class PsqlCatalog:
         if with_postgis:
             self.execute_sql(db_name, "CREATE EXTENSION IF NOT EXISTS postgis")
         schema = self.pg_schema
+        flats = {name: _flatten_for_jdbc(df) for name, df in tables.items()}
+        # every CREATE TABLE (and the schema) through ONE psql child, not
+        # one per table
+        ddl = [spark_schema_to_pg_ddl(name, flat.schema, schema)
+               for name, flat in flats.items()]
         if schema != "public":
-            self._once(
-                db_name, [f'CREATE SCHEMA IF NOT EXISTS "{schema}"']
-            )
+            ddl.insert(0, f'CREATE SCHEMA IF NOT EXISTS "{schema}"')
+        if ddl:
+            self._once(db_name, ddl)
+
         def load_one(item: tuple[str, DataFrame]) -> None:
-            name, df = item
-            flat = _flatten_for_jdbc(df)
-            self._once(
-                db_name, [spark_schema_to_pg_ddl(name, flat.schema, schema)]
-            )
+            name, flat = item
             # build the COPY text lines in the JVM BEFORE the load
-            # repartition: the per-field formatting runs under codegen
+            # exchange: the per-field formatting runs under codegen
             # at full upstream parallelism, the exchange carries one
             # string column, and only that string crosses the
             # JVM→Python boundary (r11, guide §4/§2.3 — the
             # row-at-a-time rows_to_copy_text path was the bulk load's
             # dominant cost, not the COPY wire).
+            #
+            # The exchange is an AQE rebalance, not a fixed repartition:
+            # it starts at load_partitions and coalesces to the data, so
+            # a dimension table loads through one COPY stream (one psql
+            # child) and only the fact-sized tables fan out to the cap.
             copy_lines_psql(
-                copy_lines_expr(flat).repartition(self.load_partitions),
+                copy_lines_expr(flat).hint("rebalance", self.load_partitions),
                 self.host, self.port, self.user, db_name,
                 f'{schema}."{name}"',
                 list(flat.columns),
             )
 
-        # Tables load independently (plain CREATE TABLE + COPY; all
-        # cross-table constraints/indexes arrive only in post_load_ddl
-        # below), so overlap 3 loads at a time (guide §2.6): the small
-        # tables' per-job latency hides under the big COPYs, and a big
-        # COPY's psql/server tail back-fills with the next job's tasks.
-        # Each _once/psql is its own subprocess; Spark jobs submitted
+        # Tables load independently (plain COPY into the tables created
+        # above; all cross-table constraints/indexes arrive only in
+        # post_load_ddl below), so overlap 3 loads at a time (guide §2.6):
+        # the small tables' per-job latency hides under the big COPYs, and
+        # a big COPY's psql/server tail back-fills with the next job's
+        # tasks. Each COPY stream is its own psql child; Spark jobs submitted
         # from a thread pool are the documented concurrent-jobs pattern.
         # Any failure propagates and fails the import before the flip
         # (the surrounding transaction bracket GCs the half-built DB).
@@ -746,7 +753,7 @@ class PsqlCatalog:
         ]
         rank = {n: i for i, n in enumerate(heavy_first)}
         items = sorted(
-            tables.items(),
+            flats.items(),
             key=lambda kv: rank.get(kv[0], len(heavy_first)),
         )
         if len(items) > 1:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
-from .dedup import dedup_and_remap
+from . import dedup as DD
 
 Tables = dict[str, DataFrame]
 
@@ -193,20 +193,20 @@ def remove_redundant_agencies(tables: Tables) -> Tables:
     """B11 (--remove-red-agencies, import.sh:83-85): content-identical
     agencies merged, routes.agency_id remapped."""
     content = [c for c in schemas.GTFS_FILES["agency"] if c != "agency_id"]
-    return dedup_and_remap(tables, "agency", "agency_id", content, [("routes", "agency_id")])
+    return DD.dedup_and_remap(tables, "agency", "agency_id", content, [("routes", "agency_id")])
 
 
 def remove_redundant_routes(tables: Tables) -> Tables:
     """B12 (--remove-red-routes, import.sh:86-88)."""
     content = [c for c in schemas.GTFS_FILES["routes"] if c != "route_id"]
-    return dedup_and_remap(tables, "routes", "route_id", content, [("trips", "route_id")])
+    return DD.dedup_and_remap(tables, "routes", "route_id", content, [("trips", "route_id")])
 
 
 def remove_redundant_stops(tables: Tables) -> Tables:
     """B15 (--remove-red-stops, import.sh:95-97): exact-content dedup
     including lat/lon; stop_times/transfers/pathways remapped."""
     content = [c for c in schemas.GTFS_FILES["stops"] if c != "stop_id"]
-    return dedup_and_remap(
+    return DD.dedup_and_remap(
         tables,
         "stops",
         "stop_id",
@@ -248,14 +248,15 @@ def remove_redundant_services(tables: Tables) -> Tables:
         .agg(F.sha2(F.concat_ws(",", F.sort_array(F.collect_list(F.col("date").cast("string")))), 256).alias("__fp"))
     )
     w = Window.partitionBy("__fp")
-    mapping = fp.withColumn("canonical_id", F.min("service_id").over(w)).select(
-        "service_id", "canonical_id"
+    # cut once: trips, calendar and calendar_dates all read the mapping
+    mapping = DD.materialize(
+        fp.withColumn("canonical_id", F.min("service_id").over(w)).select(
+            "service_id", "canonical_id"
+        )
     )
     out = dict(tables)
     if "trips" in out:
-        from .dedup import remap_fk
-
-        out["trips"] = remap_fk(out["trips"], "service_id", mapping, "service_id")
+        out["trips"] = DD.remap_fk(out["trips"], "service_id", mapping, "service_id")
     keep = mapping.filter(F.col("service_id") == F.col("canonical_id")).select("service_id")
     for t in ("calendar", "calendar_dates"):
         if t in out:
@@ -294,14 +295,15 @@ def remove_redundant_shapes(tables: Tables) -> Tables:
         )
     )
     w = Window.partitionBy("__fp")
-    mapping = fp.withColumn("canonical_id", F.min("shape_id").over(w)).select(
-        "shape_id", "canonical_id"
+    # cut once: trips and shapes both read the mapping
+    mapping = DD.materialize(
+        fp.withColumn("canonical_id", F.min("shape_id").over(w)).select(
+            "shape_id", "canonical_id"
+        )
     )
     out = dict(tables)
     if "trips" in out:
-        from .dedup import remap_fk
-
-        out["trips"] = remap_fk(out["trips"], "shape_id", mapping, "shape_id")
+        out["trips"] = DD.remap_fk(out["trips"], "shape_id", mapping, "shape_id")
     keep = mapping.filter(F.col("shape_id") == F.col("canonical_id")).select("shape_id")
     out["shapes"] = out["shapes"].join(keep, "shape_id", "left_semi")
     return out
@@ -352,7 +354,9 @@ def remove_redundant_trips(tables: Tables) -> Tables:
         256,
     )
     w = Window.partitionBy("__key")
-    mapping = (
+    # cut once: trips, stop_times and frequencies all read the mapping,
+    # and it embeds the stop_times fingerprint shuffle
+    mapping = DD.materialize(
         trips_fp.withColumn("__key", key)
         .withColumn("canonical_id", F.min("trip_id").over(w))
         .select("trip_id", "canonical_id")
@@ -362,9 +366,7 @@ def remove_redundant_trips(tables: Tables) -> Tables:
     out["trips"] = out["trips"].join(keep, "trip_id", "left_semi")
     out["stop_times"] = out["stop_times"].join(keep, "trip_id", "left_semi")
     if "frequencies" in out:
-        from .dedup import remap_fk
-
-        out["frequencies"] = remap_fk(out["frequencies"], "trip_id", mapping, "trip_id")
+        out["frequencies"] = DD.remap_fk(out["frequencies"], "trip_id", mapping, "trip_id")
     return out
 
 
@@ -507,6 +509,10 @@ def delete_orphans(tables: Tables, max_iters: int = 3, materialize: bool = False
         by_i = {row["i"]: row["c"] for row in u.collect()}
         return tuple(by_i[i] for i in range(len(roots)))
 
+    # Later rules of the same pass read trips (five of them), stop_times
+    # and stops: cut each once as soon as it is rewritten, or every
+    # reader's end-of-pass checkpoint re-runs its semi-join stages.
+    cut = DD.materialize if materialize else (lambda df: df)
     out = dict(tables)
     # Seed the fixpoint fingerprint from the INPUT cascade roots (r11):
     # the passes only ever DELETE rows, so unchanged (trips, stop_times,
@@ -535,12 +541,12 @@ def delete_orphans(tables: Tables, max_iters: int = 3, materialize: bool = False
                 for p in parts[1:]:
                     live_services = live_services.unionByName(p)
                 t = t.join(live_services.distinct(), "service_id", "left_semi")
-            out["trips"] = t
+            out["trips"] = cut(t)
 
         if "stop_times" in out and "trips" in out:
-            out["stop_times"] = out["stop_times"].join(
+            out["stop_times"] = cut(out["stop_times"].join(
                 out["trips"].select("trip_id"), "trip_id", "left_semi"
-            )
+            ))
 
         if "stops" in out and "stop_times" in out:
             referenced = out["stop_times"].select("stop_id").distinct()
@@ -570,7 +576,7 @@ def delete_orphans(tables: Tables, max_iters: int = 3, materialize: bool = False
                     .select("stop_id")
                 )
                 live = live.unionByName(struct_children).distinct()
-            out["stops"] = out["stops"].join(live, "stop_id", "left_semi")
+            out["stops"] = cut(out["stops"].join(live, "stop_id", "left_semi"))
 
         if "shapes" in out and "trips" in out:
             out["shapes"] = out["shapes"].join(
@@ -630,8 +636,12 @@ def minimize_services(tables: Tables) -> Tables:
     Heuristic (like gtfstidy): compute the dominant weekly bitmap over
     [min_date, max_date]; if encoding with it needs fewer exception rows
     than the pure date list, emit pattern + exceptions, else dates only.
+
+    ``dates``, ``stats``, ``new_cd`` and ``cost`` each feed two to four
+    of the rebuilt tables' plans, so each is cut once (``materialize``)
+    instead of re-running its shuffles per consuming table.
     """
-    dates = materialized_service_dates(tables).cache()
+    dates = DD.materialize(materialized_service_dates(tables))
     stats = dates.groupBy("service_id").agg(
         F.min("date").alias("start_date"),
         F.max("date").alias("end_date"),
@@ -643,10 +653,10 @@ def minimize_services(tables: Tables) -> Tables:
         ],
     )
     # weeks spanned per service (approx): days/7 rounded up
-    stats = stats.withColumn(
+    stats = DD.materialize(stats.withColumn(
         "__weeks",
         F.ceil((F.datediff("end_date", "start_date") + 1) / F.lit(7.0)).cast("int"),
-    )
+    ))
     dow_flags = [
         (F.col(f"__dow{i}") * 2 > F.col("__weeks")).cast("int").alias(_DOW_COLS[i])
         for i in range(7)
@@ -675,12 +685,12 @@ def minimize_services(tables: Tables) -> Tables:
     added = dates.join(pattern_days, ["service_id", "date"], "left_anti").select(
         "service_id", "date", F.lit(1).alias("exception_type")
     )
-    new_cd = added.unionByName(removed)
+    new_cd = DD.materialize(added.unionByName(removed))
 
     # cost comparison per service: pattern encoding = 1 calendar row
     # (weight ~1) + |exceptions|; date-list encoding = |dates|.
     exc_counts = new_cd.groupBy("service_id").agg(F.count("*").alias("__n_exc"))
-    cost = (
+    cost = DD.materialize(
         stats.select("service_id", "n_dates")
         .join(exc_counts, "service_id", "left")
         .fillna({"__n_exc": 0})
@@ -846,24 +856,30 @@ def truncate_lineage(tables: Tables) -> Tables:
     dedup/orphan passes otherwise compound into a plan whose analysis cost
     (DeduplicateRelations over repeated self-joins of the same relations)
     grows superlinearly — and at 100 TB you want the cleaned tables
-    computed once, not re-derived by every consumer. localCheckpoint
-    (lazy) truncates to an RDD barrier locally; the production pipeline
-    writes a Parquet staging dir instead (sinks.staging) which also
-    survives executor loss.
+    computed once, not re-derived by every consumer.
+    ``localCheckpoint(eager=False)`` truncates to an RDD barrier locally;
+    the production pipeline writes a Parquet staging dir instead
+    (sinks.staging) which also survives executor loss.
+
+    The call is NOT lazy under AQE: building the checkpoint RDD executes
+    the adaptive plan up to its final stage, so every shuffle and
+    broadcast stage of each table runs here, on the calling thread, and
+    only the final stage waits for the first action. Whatever several
+    tables share must therefore be cut once BEFORE this barrier
+    (``dedup.materialize`` on the dedup mappings and on
+    ``minimize_services``' intermediates), or each table's checkpoint
+    re-runs it.
 
     A table that is ALREADY a bare checkpoint leaf (untouched since the
-    previous barrier) is passed through unchanged: ``localCheckpoint``
-    is lazy about execution but eager about physical planning
-    (``queryExecution.toRdd``), so re-checkpointing a leaf pays a full
-    Catalyst pass per table per barrier for nothing — measured r11,
-    this planning (not execution) dominated the import build phase.
+    previous barrier) is passed through unchanged: re-checkpointing a
+    leaf pays a full Catalyst pass per table per barrier for nothing —
+    measured r11, this planning dominated the import build phase.
 
-    The per-table Catalyst passes are independent single-threaded
-    driver work, so they run on a small thread pool (guide §2.6 —
-    overlap independent driver-side work): planning the ~17 feed tables
-    concurrently hides most of the barrier latency. Threads only PLAN
-    (no job is submitted; execution stays lazy), so scheduler-pool and
-    job-group thread-locals are irrelevant here.
+    The per-table checkpoints are independent, so they run on a small
+    thread pool (guide §2.6 — overlap independent driver-side work):
+    the ~17 feed tables plan and run their stages concurrently. The jobs
+    are submitted from the pool's threads, so job-group and
+    scheduler-pool thread-locals of the caller do not reach them.
     """
     todo = [
         (name, df) for name, df in tables.items()

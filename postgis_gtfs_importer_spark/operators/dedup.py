@@ -39,9 +39,13 @@ def materialize(df: DataFrame) -> DataFrame:
     re-executes the whole upstream pipeline per side (exchange reuse does
     not rescue aliased self-joins reliably). Signatures/shingle sets are
     tiny relative to the corpus, so cutting lineage here converts
-    2-5 recomputations of the expensive stage into one. Locally a lazy
-    localCheckpoint; a production pipeline stages to parquet
+    2-5 recomputations of the expensive stage into one. Locally a
+    localCheckpoint(eager=False); a production pipeline stages to parquet
     (sinks.staging) for executor-loss resilience — same plan shape.
+
+    ``eager=False`` is only partly lazy under AQE: the call runs every
+    shuffle and broadcast stage of the plan at once, and only the final
+    stage waits for the first action (which also stores its blocks).
     """
     return df.localCheckpoint(eager=False)
 
@@ -106,9 +110,14 @@ def dedup_and_remap(
 
     referrers: [(table_name, fk_column), ...] to rewrite. Returns a new
     table dict (input not mutated).
+
+    The mapping is cut once (``materialize``): every referrer embeds it,
+    so without the cut each referrer's lineage barrier re-runs the
+    mapping's hash and window shuffles.
     """
     out = dict(tables)
     canonical, mapping = dedup_exact(tables[table], id_col, content_cols)
+    mapping = materialize(mapping)
     out[table] = canonical
     for ref_table, fk_col in referrers:
         if ref_table in out:

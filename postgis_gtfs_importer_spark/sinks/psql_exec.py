@@ -178,7 +178,12 @@ def copy_into(
     """Stream COPY text-format lines into ``table`` via one psql child —
     the ``gtfs-to-sql … | psql`` fast path (import.sh:124-132). Returns
     the number of lines written. Runs executor-side (one child per
-    partition)."""
+    non-empty partition: an empty ``lines`` starts no child and
+    returns 0)."""
+    lines = iter(lines)
+    first = next(lines, None)
+    if first is None:
+        return 0
     col_list = ", ".join(f'"{c}"' for c in columns)
     cmd = _base_args(host, port, user, dbname) + [
         "-c", f'COPY {table} ({col_list}) FROM STDIN',
@@ -194,7 +199,7 @@ def copy_into(
     n = 0
     assert proc.stdin is not None and proc.stderr is not None
     try:
-        for line in lines:
+        for line in itertools.chain((first,), lines):
             proc.stdin.write(line)
             n += 1
         proc.stdin.close()

@@ -317,6 +317,31 @@ def test_validation_report_counts(feed):
     assert "trips.missing_required" not in report
 
 
+#: Spark jobs to clean, derive and write every table of the fixture feed.
+#: Measured at local[8]: 292 while each table's lineage barrier re-ran
+#: the dedup mappings, the orphan pass's trips/stops and
+#: minimize_services' intermediates; 151-153 with each computed once.
+MAX_BUILD_JOBS = 180
+
+
+def test_build_job_count_pinned(spark, tmp_path):
+    """Shared cleaning intermediates run once per build: a regression
+    to per-consumer recomputation shows up as a job count far past the
+    headroom, well before it shows up as wall time."""
+    from postgis_gtfs_importer_spark.plans.pipeline import build_gtfs_tables
+
+    d = tmp_path / "feed"
+    d.mkdir()
+    write_feed_dir(str(d))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    tables = build_gtfs_tables(spark, str(d))
+    for df in tables.values():
+        df.write.format("noop").mode("overwrite").save()
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert 0 < len(jobs) <= MAX_BUILD_JOBS, len(jobs)
+
+
 def test_clean_feed_idempotent_and_fk_closed(feed):
     once = CL.clean_feed(feed)
     twice = CL.clean_feed(once)

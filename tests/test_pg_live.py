@@ -211,6 +211,46 @@ def test_retention_gc_drops_old_databases_live(spark, catalog, pg_server):
     assert catalog.meta_db not in dbs
 
 
+def test_unchanged_tick_spawns_no_psql_child_live(
+    spark, catalog, monkeypatch
+):
+    """An unchanged-feed tick runs entirely on the held meta session:
+    the pg_database scan included, it starts no one-shot psql. The scan
+    reads the same names inside the lock transaction as outside it."""
+    from postgis_gtfs_importer_spark.sinks import psql_exec
+
+    res = import_gtfs_atomically(
+        spark, catalog, db_prefix=PREFIX, feed_digest="0cafe0",
+        build_tables=lambda s, _db: {"t": s.range(3).toDF("id")},
+        now=make_clock(),
+    )
+    db = res.new_import["db_name"]
+
+    outside = catalog.list_databases(PREFIX)
+    catalog.begin_exclusive()
+    try:
+        inside = catalog.list_databases(PREFIX)
+    finally:
+        catalog.rollback()
+    assert inside == outside == [db]
+
+    once_calls = []
+    real_once = psql_exec.psql_once
+
+    def counting_once(*args, **kwargs):
+        once_calls.append(args)
+        return real_once(*args, **kwargs)
+
+    monkeypatch.setattr(psql_exec, "psql_once", counting_once)
+    skip = import_gtfs_atomically(
+        spark, catalog, db_prefix=PREFIX, feed_digest="0cafe0",
+        build_tables=lambda s, _db: pytest.fail("unchanged feed rebuilt"),
+        now=make_clock(1_700_200_000),
+    )
+    assert skip.import_skipped
+    assert once_calls == []
+
+
 def test_failed_import_rolls_back_and_gcs_orphan_live(spark, catalog):
     """A18/A19: a build_tables crash aborts before the pointer flip; the
     orphan DB is swept by the next successful run's reconciliation."""
