@@ -762,6 +762,7 @@ class PsqlCatalog:
         else:
             for item in items:
                 load_one(item)
+        post_ddl = []
         for stmt in post_load_ddl(set(tables), schema, partition_by):
             if not with_postgis and (
                 "geography(" in stmt or "USING GIST" in stmt
@@ -769,7 +770,11 @@ class PsqlCatalog:
             ):
                 log.warning("postgis unavailable; skipping: %s", stmt[:80])
                 continue
-            self.execute_sql(db_name, stmt)
+            post_ddl.append(stmt)
+        # the whole post-load DDL as ONE psql -1 script: one child and one
+        # transaction per snapshot instead of one per statement
+        if post_ddl:
+            self.execute_sql(db_name, ";\n".join(post_ddl) + ";")
 
     def execute_sql(self, db_name: str, sql: str) -> None:
         """One atomic script — ``psql -1 -v ON_ERROR_STOP=1``

@@ -1221,13 +1221,19 @@ def _tri_rows(adj: DataFrame) -> DataFrame:
 
 
 def _tri_edges(tri: DataFrame) -> DataFrame:
-    """The three canonical (a, b) edges of each canonical (x < y < z)
-    triangle row, each paired with the triangle's third vertex as ``w``
-    (the partner the edge loses when the triangle dies), emitted in ONE
-    map-side explode — a single scan of the input instead of the three
-    a unionAll of per-edge projections costs (r12; the input is the
-    materialized triangle stream, so even the unionAll form only re-read
-    a checkpoint, but one scan is still strictly less work and one plan
+    """The three (a, b) edges of each triangle row, each paired with the
+    triangle's third vertex as ``w`` (the partner the edge loses when the
+    triangle dies), emitted in ONE map-side explode.
+
+    Precondition: every input row is canonical, ``x < y < z``. Nothing
+    here checks it; a row out of that order emits pairs with ``a > b``,
+    and ktruss would count their support on keys that no canonical
+    (a < b) edge carries.
+
+    One explode scans the input once. A unionAll of three per-edge
+    projections would scan it three times (r12; the input is the
+    materialized triangle stream, so those scans only re-read a
+    checkpoint, but one scan is still strictly less work and one plan
     branch instead of three). Canonical order makes least/greatest
     unnecessary: x < y < z implies every emitted pair is already
     (a < b)."""

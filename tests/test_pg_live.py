@@ -118,8 +118,18 @@ def _psql(pg, dbname, sql):
     return [line for line in out.stdout.splitlines() if line]
 
 
-def test_full_import_cycle_against_live_postgres(spark, catalog, pg_server, tmp_path):
+def test_full_import_cycle_against_live_postgres(
+    spark, catalog, pg_server, tmp_path, monkeypatch
+):
     """run_import end-to-end: clean, derive, COPY-load, flip pointer."""
+    scripts: list[str] = []
+    real_execute_sql = PsqlCatalog.execute_sql
+
+    def recording_execute_sql(self, db_name, sql):
+        scripts.append(sql)
+        return real_execute_sql(self, db_name, sql)
+
+    monkeypatch.setattr(PsqlCatalog, "execute_sql", recording_execute_sql)
     zip_path = write_feed_zip(str(tmp_path / "gtfs.zip"))
     res = run_import(
         spark,
@@ -146,16 +156,24 @@ def test_full_import_cycle_against_live_postgres(spark, catalog, pg_server, tmp_
                      "SELECT count(*) FROM arrivals_departures")[0])
     assert n_ad > 0
 
-    # C8-adjacent: PK DDL applied (trips.trip_id primary key)
+    # C8-adjacent: PK DDL applied (agency/stops/routes/trips primary keys)
     pk = _psql(pg_server, db,
-               "SELECT count(*) FROM information_schema.table_constraints"
-               " WHERE table_name = 'trips' AND constraint_type = 'PRIMARY KEY'")
-    assert pk == ["1"]
+               "SELECT table_name FROM information_schema.table_constraints"
+               " WHERE constraint_type = 'PRIMARY KEY'"
+               " AND table_schema = 'public' ORDER BY table_name")
+    assert pk == ["agency", "routes", "stops", "trips"]
     # partition-pruning analog: B-tree index on arrivals_departures(date)
     idx = _psql(pg_server, db,
                 "SELECT indexname FROM pg_indexes"
                 " WHERE tablename = 'arrivals_departures'")
     assert "arrivals_departures_date_idx" in idx
+    # ... and the whole post-load DDL (PKs + indexes) ran as ONE psql -1
+    # script, not one psql child per statement
+    ddl_scripts = [s for s in scripts
+                   if "ADD PRIMARY KEY" in s or "CREATE INDEX" in s]
+    assert len(ddl_scripts) == 1
+    assert ddl_scripts[0].count("ADD PRIMARY KEY") == 4
+    assert "CREATE INDEX arrivals_departures_date_idx" in ddl_scripts[0]
 
     # bookkeeping pointer flipped (A15/A22)
     rec = catalog.latest_import(PREFIX)
