@@ -8,11 +8,6 @@ discipline in the curation family. The reference has no corpus surface
 (/root/reference/import.sh:119-124 delegates its relational work); this
 extends the engine toward the LLM-pipeline workload like
 operators/curation.py.
-
-Lives in its own module (rather than appended to curation.py) so the
-verification ledger's module-digest closure doesn't flag the already-
-green curation registry entries for a change none of their code paths
-saw.
 """
 
 from __future__ import annotations

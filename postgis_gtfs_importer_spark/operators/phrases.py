@@ -8,11 +8,6 @@ relational work to gtfs-via-postgres, /root/reference/import.sh:119-124);
 this extends the engine toward the LLM-corpus workload like the rest of
 the indexing family.
 
-Lives in its own module (rather than appended to indexing.py) so the
-verification ledger's module-digest closure doesn't flag the nineteen
-already-green indexing/curation registry entries for a change none of
-their code paths saw.
-
 Determinism contract (shared with indexing._lower_tokens and the DuckDB
 oracle twin): lowercase whitespace tokenization of ``trim(text)``;
 blank text yields zero tokens; counts and positions are exact integers.

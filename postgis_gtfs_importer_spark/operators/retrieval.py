@@ -21,9 +21,7 @@ ranking families (indexing.bm25_topk — lexical; similarity.* — dense):
 Reference scope: extension family (the reference has no retrieval
 surface; /root/reference/import.sh:119-124 delegates all relational
 work) — these extend the engine toward the LLM-pipeline workload like
-operators/curation.py. New module rather than an append to
-similarity.py so the verification ledger's reached-binding closure
-keeps the green similarity entries untouched.
+operators/curation.py.
 
 Exactness: fusion contributions are BIGINT ``RRF_SCALE // (K + rank)``
 (integer floor division — Spark ``div`` == DuckDB ``//`` on

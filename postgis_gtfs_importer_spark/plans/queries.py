@@ -14,6 +14,11 @@ is engine-independent.
 
 Every docstring cites the reference operator(s) the query exercises
 (file:line into /root/reference).
+
+``queries()`` and ``oracle_sql()`` return the entries in registration
+order (the order of the ``@register`` decorators below); no caller
+depends on that order. ``tests/test_oracle_parity.py`` checks every
+entry against its oracle.
 """
 
 from __future__ import annotations
@@ -44,149 +49,15 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-#: Driver-visibility ordering. The external correctness gate checks a
-#: prefix window of the registry (first 50 entries of queries() order), so
-#: the dict order below is a statement of verification priority, not
-#: taste. Standing rule (VERDICT r3 item 1): any registry entry whose
-#: transitive implementation changed since its last recorded driver row
-#: MUST sit inside the window. Since round 5 that rule is MECHANIZED:
-#: plans/ledger.py records (last-green-round, implementation-digest) per
-#: entry in verification_ledger.json, and tests/test_registry_ledger.py
-#: fails if any stale entry (no row, or digest drift) sits outside the
-#: window — the e33fced class of hand-comment drift is now a test
-#: failure. Run `python -m postgis_gtfs_importer_spark.plans.ledger
-#: refresh` at round start, before any edit.
-
-#: Round-12 window (optimization round 2). The r11 window landed 50/50
-#: green (CORRECTNESS_r11); the round-start incremental ledger refresh
-#: folded all 50 rows in (stale set 0). The stale set below is what
-#: THIS round's optimization work re-staled, at the ledger's
-#: per-definition digest granularity:
-#: - trip_overtaking: enrich-then-pair join order (derivations.py) —
-#:   the pair-multiplied stream is never reshuffled.
-#: - dsir_resample: single materialization of the raw gram stream,
-#:   corpus totals derived from bucket counts (curation.py).
-#: - mmr_select + rrf_fusion: the literal re-injection dim guard
-#:   (MMR_LITERAL_DIM_MAX broadcast fallback) re-digested retrieval.py.
-#: - ktruss + adamic_adar/local_clustering/triangle_count: the
-#:   count-only support state rewrite (canonical triple stream,
-#:   cumulative destroyed-set anti-join) re-digested _tri_edges/
-#:   _respread reach in graph.py.
-#: - the similarity family (embedding_cosine_pairs, knn_graph,
-#:   hard_negatives, semantic_dedup, embedding_topk, ann_*,
-#:   knn_label_vote, rbo_overlap, ann_recall_at_k): the per-pair
-#:   float->double cast hoisted to per-row projections
-#:   (V.double_array + V.dot_double — bit-identical scores, the cast
-#:   layer moved out of the interpreted pair fold) re-digested
-#:   similarity.py's scoring sites.
-#: - prefix_filter_jaccard: the candidate self-join key hashed to an
-#:   xxhash64 long (guide §2.3; lossless — every candidate is verified
-#:   by exact array_intersect afterwards).
-#: Every one re-verified value-level against its oracle at sf0.01
-#: (and the restructured ones additionally at sf0.1) post-change.
-_RESTALE_R12: list[str] = [
-    "adamic_adar",
-    "ann_int8_topk",
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "ann_recall_at_k",
-    "dsir_resample",
-    "embedding_cosine_pairs",
-    "embedding_topk",
-    "hard_negatives",
-    "knn_graph",
-    "knn_label_vote",
-    "ktruss",
-    "local_clustering",
-    "mmr_select",
-    "prefix_filter_jaccard",
-    "rbo_overlap",
-    "rrf_fusion",
-    "semantic_dedup",
-    "triangle_count",
-    "trip_overtaking",
-]
-
-#: Round-12 additions: NONE (optimization round — no new features; the
-#: staged PCA family from the interrupted r11 build stays unregistered,
-#: documented in OPTIMIZATION_r12.md).
-_ADDITIONS_R12: list[str] = []
-
-#: Freshness rotation (the committed drain order): the remaining slots
-#: take the verified entries with the OLDEST green driver rows —
-#: computed from the ledger at round start (histogram r6=20, r7=36,
-#: r8=37, r9=36, r10=40, r11=50) — name order within a round: first
-#: the 20 r6-row entries displaced by the r11 restale wave
-#: (quality_gate .. translations_feedwide), then the r7-row drain in
-#: name order until the window holds exactly 50. They were picked as
-#: the verified-but-oldest rows; after the round's scan-cache sweep
-#: (see _SCAN_CACHE_OVERFLOW at module bottom) they are ALSO
-#: digest-stale like everything else, so the window drains the oldest
-#: rows first while the remaining changed-since entries queue per the
-#: freeze policy.
-_ROTATION_R12: list[str] = [
-    "quality_gate",
-    "repetition_profile",
-    "rolling_fingerprint",
-    "score_quantile_norm",
-    "shape_lengths",
-    "simhash_pairs",
-    "source_cap",
-    "stops_radius_pairs",
-    "stratified_sample",
-    "streaming_corpus_gate",
-    "streaming_dedup",
-    "streaming_enrich",
-    "streaming_interval_join",
-    "streaming_interval_join_outer",
-    "streaming_sessionize",
-    "streaming_windowed_stats",
-    "temperature_sample",
-    "tfidf_distinctive",
-    "translations_feedwide",
-    "audio_features",
-    "bloom_membership",
-    "bpe_encode",
-    "bpe_merges",
-    "corpus_curation",
-    "dedup_exact",
-    "doc_fingerprint",
-    "frame_sample_stats",
-    "funnel_conversion",
-    "greedy_set_cover",
-    "hilbert_hist",
-]
-
-_OVERFLOW_QUEUE: list[str] = []
-
-#: Human-readable subset of the ledger's stale set (changed-since rows
-#: + never-verified additions). Enforced against the ledger by
-#: tests/test_registry_ledger.py (both directions).
-_MUST_VERIFY: list[str] = [*_RESTALE_R12, *_ADDITIONS_R12]
-
-_FRONT: list[str] = [
-    *_RESTALE_R12,
-    *_ADDITIONS_R12,
-    *_ROTATION_R12,
-    *_OVERFLOW_QUEUE,
-]
-
-
-def _ordered() -> list[str]:
-    front = [n for n in _FRONT if n in _REGISTRY]
-    rest = [n for n in _REGISTRY if n not in _FRONT]
-    return front + rest
-
-
 def queries() -> dict[str, SparkQuery]:
-    return {name: _REGISTRY[name][0] for name in _ordered()}
+    return {name: fn for name, (fn, _) in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        name: _REGISTRY[name][1]
-        for name in _ordered()
-        if _REGISTRY[name][1] is not None
+        name: oracle
+        for name, (_, oracle) in _REGISTRY.items()
+        if oracle is not None
     }
 
 
@@ -2737,13 +2608,6 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference exposes its query surface only through PostgreSQL
     (SURVEY §2.D); this is the Spark-native equivalent of that SQL-in,
     relational-out surface (sources/tables.py::register_views).
-    (Wording note: this docstring must not contain any bare token that
-    names a module-level binding of this file — e.g. the plural of
-    "query", which the ledger's identifier scan resolves to the
-    top-level accessor of that name, whose reach includes the window
-    ordering list, silently re-staling this entry on EVERY window
-    rotation; that exact coupling cost it a spurious re-stale in
-    round 8.)
     """
     from ..sources.tables import register_views
 
@@ -12146,32 +12010,3 @@ def quantile_sketch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantile_sketch_quantiles(
         st, ["l_returnflag"], [100000, 250000, 500000, 750000, 900000, 990000]
     ).select("l_returnflag", "q_e6", "est")
-
-
-# ===========================================================================
-# Round-12 scan-cache sweep restale (SURVEY §8 freeze-policy overflow)
-# ===========================================================================
-#: sources.tables.load_table now reuses the immutable scan frame per
-#: (session, dir, table) — plan/schema METADATA only, the catalog
-#: analog for the path API; every action still reads the parquet bytes
-#: — which re-digests EVERY registry entry at once (load_table is in
-#: every entry's transitive closure). The 50-slot window keeps the
-#: round's 20 behavior-adjacent restales plus the 30-entry freshness
-#: drain in front; the remaining changed-since entries queue here per
-#: the freeze policy (window fully stale, overflow changed-since only,
-#: queued at the _FRONT tail so later rounds drain it mechanically).
-#: Compensating verification THIS round: the close-out cross-SF sweeps
-#: value-verify ALL entries against their DuckDB oracles at sf0.001
-#: and sf0.1 (recorded in OPTIMIZATION_r12.md), strictly more coverage
-#: than the driver's 50-row sample.
-#: (Assignment form, not .extend(): expression statements are module
-#: RESIDUE in the ledger's v2 walk and would pull the window lists —
-#: and through their query-name identifiers half the registry — into
-#: every entry's digest, making window edits restale the world.
-#: Bindings are only hashed when an entry actually references them.)
-_SCAN_CACHE_OVERFLOW: list[str] = sorted(
-    n for n in _REGISTRY if n not in set(_FRONT)
-)
-_OVERFLOW_QUEUE = [*_OVERFLOW_QUEUE, *_SCAN_CACHE_OVERFLOW]
-_FRONT = [*_FRONT, *_SCAN_CACHE_OVERFLOW]
-_MUST_VERIFY = [*_MUST_VERIFY, *_ROTATION_R12, *_SCAN_CACHE_OVERFLOW]

@@ -33,5 +33,5 @@ def test_query_matches_oracle(spark, duck, name):
 def test_all_queries_have_entries():
     qs = Q.queries()
     assert len(qs) >= 15
-    for name in ORACLES:
-        assert name in qs
+    assert list(qs) == list(Q._REGISTRY)
+    assert set(ORACLES) <= set(qs)

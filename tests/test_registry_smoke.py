@@ -28,42 +28,3 @@ def test_registry_entry_runs_on_real_testdata(spark, name):
     assert df.count() >= 0  # executes; emptiness is a parity question
     assert df.columns  # stable, non-empty schema
 
-
-def test_front_window_covers_unproven_families():
-    """The driver checks a prefix window of the registry (first 50).
-    Every _FRONT entry must resolve and sit inside it — except the
-    declared _OVERFLOW_QUEUE overflow, which queues at the _FRONT
-    tail for the NEXT round (the test_registry_ledger overflow
-    invariant governs when that tail may be non-empty)."""
-    names = list(REGISTRY)
-    window = set(names[:50])
-    missing = [
-        n
-        for n in Q._FRONT
-        if n not in window and n not in Q._OVERFLOW_QUEUE
-    ]
-    assert not missing, f"front entries outside driver window: {missing}"
-    # the backlog must be the CONTIGUOUS tail, nothing interleaved
-    front = [n for n in Q._FRONT if n in REGISTRY]
-    assert front[: len(front) - len(Q._OVERFLOW_QUEUE)] == [
-        n for n in front if n not in Q._OVERFLOW_QUEUE
-    ]
-
-
-def test_must_verify_entries_inside_driver_window():
-    """Standing rule from VERDICT r3: any entry whose transitive
-    implementation changed since its last recorded driver row must sit
-    inside the correctness window — or, when the stale set overflows
-    the window, in the declared migration backlog queued for the next
-    round (never-verified entries keep absolute precedence; see
-    test_registry_ledger for the full overflow invariant)."""
-    names = list(REGISTRY)
-    window = set(names[:50])
-    unknown = [n for n in Q._MUST_VERIFY if n not in REGISTRY]
-    assert not unknown, f"_MUST_VERIFY names not in registry: {unknown}"
-    outside = [
-        n
-        for n in Q._MUST_VERIFY
-        if n not in window and n not in Q._OVERFLOW_QUEUE
-    ]
-    assert not outside, f"changed-impl entries outside driver window: {outside}"

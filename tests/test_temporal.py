@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgis_gtfs_importer_spark.operators.temporal import asof_join
@@ -247,3 +248,50 @@ def test_asof_forward_matches_naive_reference_on_random_inputs(spark):
         cands = sorted(x for x in by_key.get(k, []) if x[0] >= t)
         want = (cands[0][1], cands[0][0]) if cands else (None, None)
         assert got[(k, t)] == want, (k, t)
+
+
+def test_asof_reserved_and_dotted_value_cols_rejected(spark):
+    from postgis_gtfs_importer_spark.operators.temporal import (
+        asof_join,
+        asof_join_forward,
+    )
+
+    left = spark.createDataFrame([("k", 10)], "k string, ts long")
+    right = spark.createDataFrame([("k", 5, 1.0)], "k string, ts long, v double")
+
+    for fn in (asof_join, asof_join_forward):
+        with pytest.raises(ValueError, match="_r_ts"):
+            fn(left, right.withColumnRenamed("v", "_r_ts"),
+               ["k"], "ts", ["_r_ts"])
+        with pytest.raises(ValueError, match="dots"):
+            fn(left, right.select("k", "ts", F.col("v").alias("a.b")),
+               ["k"], "ts", ["a.b"])
+        with pytest.raises(ValueError, match="reserved"):
+            fn(left.withColumn("_side", F.lit(1)), right, ["k"], "ts", ["v"])
+        with pytest.raises(ValueError, match="reserved"):
+            fn(left, right.withColumn("_pack", F.lit(1)), ["k"], "ts", ["v"])
+        # the valid shape still works
+        assert fn(left, right, ["k"], "ts", ["v"]).count() == 1
+
+
+def test_locf_first_step_null_observation(spark):
+    """A key whose min-ts observation carries a NULL value starts its
+    grid with (NULL, is_observed=false) — nothing earlier to carry."""
+    from postgis_gtfs_importer_spark.operators.temporal import locf_resample
+
+    rows = [
+        ("k", "2024-01-01 00:00:00", None, 1),  # earliest: NULL value
+        ("k", "2024-01-01 02:00:00", 30, 2),
+    ]
+    df = spark.createDataFrame(
+        rows, "key string, s string, v int, id int"
+    ).select("key", F.col("s").cast("timestamp").alias("ts"), "v", "id")
+    got = {
+        r["step"]: (r["value"], r["is_observed"])
+        for r in locf_resample(df, "key", "ts", "v", "id").collect()
+    }
+    steps = sorted(got)
+    assert len(steps) == 3
+    assert got[steps[0]] == (None, False)
+    assert got[steps[1]] == (None, False)
+    assert got[steps[2]] == (30, True)
