@@ -42,10 +42,6 @@ def __getattr__(name):
         from .catalog import LocalCatalog
 
         return LocalCatalog
-    if name == "PostgresCatalog":
-        from .catalog import PostgresCatalog
-
-        return PostgresCatalog
     if name == "read_feed":
         from .sources.gtfs_feed import read_feed
 

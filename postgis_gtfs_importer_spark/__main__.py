@@ -15,8 +15,12 @@ configured catalog backend:
                                import.js:295-304; without credentials a
                                PgBouncer consumer cannot authenticate)
     GTFS_SNAPSHOT_ROOT         (LocalCatalog root; default $GTFS_TMP_DIR/snapshots)
-    PGHOST/PGPORT/PGUSER/PGPASSWORD/PGDATABASE
-                               (if set, use PostgresCatalog — A21)
+    PGHOST/PGPORT/PGUSER/PGDATABASE
+                               (PGHOST set: publish into PostgreSQL through
+                               PsqlCatalog — A21; defaults 5432/postgres/
+                               postgres)
+    PGPASSWORD                 (not read here: psql children inherit the
+                               environment, so psql reads it itself)
 """
 
 from __future__ import annotations
@@ -52,14 +56,13 @@ def main() -> None:
 
     spark = get_spark(app_name="gtfs-import")
     if os.environ.get("PGHOST"):
-        from .catalog import PostgresCatalog
+        from .catalog import PsqlCatalog
 
-        catalog = PostgresCatalog(
+        catalog = PsqlCatalog(
             spark,
             host=os.environ["PGHOST"],
             port=int(os.environ.get("PGPORT", "5432")),
             user=os.environ.get("PGUSER", "postgres"),
-            password=os.environ.get("PGPASSWORD", ""),
             meta_db=os.environ.get("PGDATABASE", "postgres"),
         )
     else:
@@ -72,21 +75,24 @@ def main() -> None:
     from .operators.cleaning import CleaningConfig
 
     cleaning = CleaningConfig.from_env()  # None ⇔ GTFSTIDY_BEFORE_IMPORT=false
-    result = run_import(
-        spark,
-        catalog,
-        db_prefix=prefix,
-        download_url=url,
-        zip_path=os.path.join(tmp_dir, "gtfs.zip"),
-        extract_dir=os.path.join(tmp_dir, "gtfs"),
-        user_agent=user_agent,
-        postprocessing_dir=os.environ.get("GTFS_POSTPROCESSING_D_PATH"),
-        dsn_file_path=dsn_file_path,
-        dsn_user=dsn_user,
-        dsn_password=dsn_password,
-        cleaning=cleaning,
-        skip_cleaning=cleaning is None,
-    )
+    try:
+        result = run_import(
+            spark,
+            catalog,
+            db_prefix=prefix,
+            download_url=url,
+            zip_path=os.path.join(tmp_dir, "gtfs.zip"),
+            extract_dir=os.path.join(tmp_dir, "gtfs"),
+            user_agent=user_agent,
+            postprocessing_dir=os.environ.get("GTFS_POSTPROCESSING_D_PATH"),
+            dsn_file_path=dsn_file_path,
+            dsn_user=dsn_user,
+            dsn_password=dsn_password,
+            cleaning=cleaning,
+            skip_cleaning=cleaning is None,
+        )
+    finally:
+        catalog.close()
     print(result)
     spark.stop()
 

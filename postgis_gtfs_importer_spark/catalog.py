@@ -7,10 +7,11 @@ cross-job transaction or lock, so — exactly like the reference keeps this
 in Postgres rather than in Node — we keep it in the catalog backend, not
 in Spark:
 
-  * ``PostgresCatalog``: the parity backend. Bookkeeping + lock + pointer
-    flip in the meta DB over two connections (the CREATE/DROP DATABASE
-    dance can't run inside a transaction, import.js:115-118); snapshot
-    tables written by Spark's JDBC writer.
+  * ``PsqlCatalog``: the parity backend, the only PostgreSQL one.
+    Bookkeeping + lock + pointer flip in the meta DB on a held psql
+    session, CREATE/DROP DATABASE in one-shot psql calls (the dance
+    can't run inside a transaction, import.js:115-118); snapshot tables
+    loaded by per-partition ``psql`` COPY streams.
   * ``LocalCatalog``: the same state machine against local storage —
     bookkeeping in a SQLite file (real transactions; ``BEGIN IMMEDIATE``
     with ``busy_timeout=0`` gives the reference's fail-fast
@@ -26,6 +27,7 @@ import logging
 import os
 import shutil
 import sqlite3
+import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -209,11 +211,8 @@ class LocalCatalog:
         (tests/test_publish.py) and through ``psql -1`` against live
         PostgreSQL (tests/test_pg_live.py::test_hook_sql_dialect_parity_live).
         A PG-only hook is a deliberate opt-out of local testability and
-        must be validated against PsqlCatalog/PostgresCatalog directly.
+        must be validated against PsqlCatalog directly.
         """
-        import shutil
-        import tempfile
-
         import duckdb
 
         base = os.path.join(self.root, db_name)
@@ -320,217 +319,6 @@ class LocalCatalog:
         self._con.close()
 
 
-class PostgresCatalog:
-    """Parity backend: PostGIS snapshots + Postgres meta-DB over psycopg2.
-
-    Faithful to the reference's two-connection design:
-      * ``meta`` connection — bookkeeping transaction + ``LOCK TABLE …
-        IN EXCLUSIVE MODE NOWAIT`` (import.js:126-132);
-      * ``mgmt`` connection (autocommit) — ``CREATE/DROP DATABASE``
-        which cannot run inside a transaction (import.js:115-118).
-
-    Spark writes snapshot tables via JDBC (numPartitions-parallel,
-    ``reWriteBatchedInserts=true``) into the freshly minted database —
-    replacing the reference's ``gtfs-to-sql | psql`` COPY stream
-    (import.sh:124-132). Requires psycopg2 + a PostgreSQL JDBC driver on
-    the Spark classpath; import-gated so the rest of the engine runs
-    without either.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        host: str,
-        port: int,
-        user: str,
-        password: str,
-        meta_db: str = "postgres",
-        jdbc_write_options: dict | None = None,
-    ):
-        try:
-            import psycopg2  # noqa: F401
-        except ImportError as e:  # pragma: no cover - env without psycopg2
-            raise ImportError(
-                "PostgresCatalog requires psycopg2 (LocalCatalog has no "
-                "external dependencies)"
-            ) from e
-        import psycopg2
-
-        self.spark = spark
-        self._cfg = dict(host=host, port=port, user=user, password=password)
-        self.meta_db = meta_db
-        self._meta = psycopg2.connect(dbname=meta_db, **self._cfg)
-        self._meta.autocommit = True  # explicit BEGIN/COMMIT below
-        self._mgmt = psycopg2.connect(dbname=meta_db, **self._cfg)
-        self._mgmt.autocommit = True
-        self._jdbc_opts = {
-            "user": user,
-            "password": password,
-            "driver": "org.postgresql.Driver",
-            "reWriteBatchedInserts": "true",
-            "batchsize": "10000",
-            **(jdbc_write_options or {}),
-        }
-
-    def ensure_bookkeeping(self) -> None:
-        with self._meta.cursor() as cur:
-            cur.execute(
-                f"""CREATE TABLE IF NOT EXISTS {BOOKKEEPING_TABLE} (
-                    db_name TEXT PRIMARY KEY,
-                    -- UNIX timestamp (index.js:158)
-                    imported_at INTEGER NOT NULL,
-                    feed_digest TEXT NOT NULL
-                )"""
-            )
-
-    def begin_exclusive(self) -> None:
-        import psycopg2
-
-        with self._meta.cursor() as cur:
-            cur.execute("BEGIN")
-            try:
-                cur.execute(
-                    f"LOCK TABLE {BOOKKEEPING_TABLE} IN EXCLUSIVE MODE NOWAIT"
-                )
-            except psycopg2.errors.LockNotAvailable as e:
-                cur.execute("ROLLBACK")
-                raise ImportLockedError(
-                    "another import is running (bookkeeping lock held)"
-                ) from e
-
-    def commit(self) -> None:
-        with self._meta.cursor() as cur:
-            cur.execute("COMMIT")
-
-    def rollback(self) -> None:
-        with self._meta.cursor() as cur:
-            cur.execute("ROLLBACK")
-
-    def list_recorded_imports(self, prefix: str) -> list[ImportRecord]:
-        import psycopg2
-
-        try:
-            with self._meta.cursor() as cur:
-                cur.execute(
-                    f"""SELECT db_name, imported_at, feed_digest
-                        FROM {BOOKKEEPING_TABLE}
-                        WHERE substring(db_name FOR %s) = %s
-                        ORDER BY imported_at DESC, db_name DESC""",
-                    (len(prefix), prefix),
-                )
-                return [ImportRecord(*r) for r in cur.fetchall()]
-        except psycopg2.errors.UndefinedTable:
-            # missing relation tolerated (index.js:199-203)
-            return []
-
-    def list_databases(self, prefix: str) -> list[str]:
-        with self._mgmt.cursor() as cur:
-            cur.execute(
-                """SELECT datname FROM pg_catalog.pg_database
-                   WHERE substring(datname FOR %s) = %s
-                   ORDER BY datname ASC""",
-                (len(prefix), prefix),
-            )
-            # A11: never treat the meta DB itself as a snapshot
-            return [r[0] for r in cur.fetchall() if r[0] != self.meta_db]
-
-    def create_database(self, db_name: str) -> None:
-        with self._mgmt.cursor() as cur:
-            cur.execute(f'CREATE DATABASE "{db_name}"')
-
-    def drop_database(self, db_name: str) -> None:
-        with self._mgmt.cursor() as cur:
-            cur.execute(f'DROP DATABASE "{db_name}"')
-
-    def record_import(self, rec: ImportRecord) -> None:
-        with self._meta.cursor() as cur:
-            cur.execute(
-                f"INSERT INTO {BOOKKEEPING_TABLE} (db_name, imported_at,"
-                " feed_digest) VALUES (%s, %s, %s)",
-                (rec.db_name, rec.imported_at, rec.feed_digest),
-            )
-
-    def remove_import_record(self, db_name: str) -> None:
-        with self._meta.cursor() as cur:
-            cur.execute(
-                f"DELETE FROM {BOOKKEEPING_TABLE} WHERE db_name = %s", (db_name,)
-            )
-
-    def _jdbc_url(self, db_name: str) -> str:
-        return (
-            f"jdbc:postgresql://{self._cfg['host']}:{self._cfg['port']}/{db_name}"
-        )
-
-    def write_tables(
-        self,
-        db_name: str,
-        tables: dict[str, DataFrame],
-        partition_by: dict[str, list[str]] | None = None,
-    ) -> None:
-        """Same signature as LocalCatalog.write_tables — run_import passes
-        partition_by unconditionally, so this backend must accept it.
-        JDBC rows aren't parquet-partitioned; the pruning analog is a
-        post-load B-tree index on the partition columns."""
-        from .sinks.postgis import write_snapshot
-
-        write_snapshot(self, db_name, tables, partition_by=partition_by)
-
-    def execute_sql(self, db_name: str, sql: str) -> None:
-        """Run one SQL script against a snapshot DB in a single transaction
-        — the postprocessing.d/*.sql hook semantics (psql -1 -v
-        ON_ERROR_STOP=1, import.sh:141)."""
-        import psycopg2
-
-        con = psycopg2.connect(dbname=db_name, **self._cfg)
-        try:
-            with con:  # one transaction, aborts atomically on error
-                with con.cursor() as cur:
-                    cur.execute(sql)
-        finally:
-            con.close()
-
-    def connection_info(self, db_name: str) -> dict[str, str]:
-        return {
-            "host": str(self._cfg["host"]),
-            "port": str(self._cfg["port"]),
-            "dbname": db_name,
-        }
-
-    def latest_import(self, prefix: str):
-        recs = self.list_recorded_imports(prefix)
-        return recs[0] if recs else None
-
-    def open_latest(self, prefix: str) -> dict[str, DataFrame]:
-        """Consumer API twin of LocalCatalog.open_latest: JDBC reads of
-        every public table in the latest published snapshot DB."""
-        rec = self.latest_import(prefix)
-        if rec is None:
-            raise LookupError(f"no published import with prefix {prefix!r}")
-        import psycopg2
-
-        con = psycopg2.connect(dbname=rec.db_name, **self._cfg)
-        try:
-            with con.cursor() as cur:
-                cur.execute(
-                    "SELECT table_name FROM information_schema.tables"
-                    " WHERE table_schema = 'public' AND table_type = 'BASE TABLE'"
-                )
-                names = [r[0] for r in cur.fetchall()]
-        finally:
-            con.close()
-        url = self._jdbc_url(rec.db_name)
-        return {
-            t: self.spark.read.jdbc(
-                url, f"public.{t}", properties=self._jdbc_opts
-            )
-            for t in sorted(names)
-        }
-
-    def close(self) -> None:
-        self._meta.close()
-        self._mgmt.close()
-
-
 class PsqlCatalog:
     """Live-PostgreSQL catalog over psql subprocesses — zero Python
     driver dependencies, exactly the reference's own architecture (it
@@ -538,7 +326,7 @@ class PsqlCatalog:
     import.js:115-132, ``gtfs-to-sql … | psql`` import.sh:124-132, and
     ``psql -1`` hooks import.sh:141).
 
-    Same interface as LocalCatalog/PostgresCatalog. Three connection
+    Same interface as LocalCatalog. Three connection
     roles, as in the reference:
 
       * ``_meta``   — ONE held PsqlSession on the meta DB: bookkeeping
@@ -573,6 +361,8 @@ class PsqlCatalog:
         self.load_partitions = load_partitions
         self.pg_schema = pg_schema  # C8 --schema targeting
         self._meta = PsqlSession(host=host, port=port, user=user, dbname=meta_db)
+        # read_table's CSV exports; removed by close()
+        self._read_dir = tempfile.mkdtemp(prefix="psql-catalog-")
 
     # -- one-shot helpers ----------------------------------------------------
 
@@ -682,7 +472,7 @@ class PsqlCatalog:
     ) -> None:
         from .sinks.pg_copy import copy_lines_expr, copy_lines_psql
         from .sinks.postgis import (
-            _flatten_for_jdbc,
+            _flatten_nested,
             post_load_ddl,
             spark_schema_to_pg_ddl,
         )
@@ -691,7 +481,7 @@ class PsqlCatalog:
         if with_postgis:
             self.execute_sql(db_name, "CREATE EXTENSION IF NOT EXISTS postgis")
         schema = self.pg_schema
-        flats = {name: _flatten_for_jdbc(df) for name, df in tables.items()}
+        flats = {name: _flatten_nested(df) for name, df in tables.items()}
         # every CREATE TABLE (and the schema) through ONE psql child, not
         # one per table
         ddl = [spark_schema_to_pg_ddl(name, flat.schema, schema)
@@ -785,25 +575,23 @@ class PsqlCatalog:
 
     def read_table(self, db_name: str, table: str) -> DataFrame:
         """Consumer read: COPY TO STDOUT CSV → Spark csv reader (header +
-        schema inference). The convenience path for tests/consumers
-        without a JDBC driver on the classpath."""
+        schema inference), with psql as the only client. The CSV lands in
+        this catalog's temp directory and lives until ``close()``."""
         import subprocess
-        import tempfile
 
         from .sinks.psql_exec import _base_args, _env
 
-        tmp = tempfile.NamedTemporaryFile(
-            mode="w", suffix=".csv", delete=False
-        )
         cmd = _base_args(self.host, self.port, self.user, db_name) + [
             "-c",
             f'COPY (SELECT * FROM {self.pg_schema}."{table}") TO STDOUT'
             " WITH (FORMAT CSV, HEADER)",
         ]
-        subprocess.run(
-            cmd, stdout=tmp, env=_env(), check=True, text=True
-        )
-        tmp.close()
+        with tempfile.NamedTemporaryFile(
+            mode="w", suffix=".csv", dir=self._read_dir, delete=False
+        ) as tmp:
+            subprocess.run(
+                cmd, stdout=tmp, env=_env(), check=True, text=True
+            )
         return self.spark.read.csv(tmp.name, header=True, inferSchema=True)
 
     def connection_info(self, db_name: str) -> dict[str, str]:
@@ -831,4 +619,8 @@ class PsqlCatalog:
         return {r[0]: self.read_table(rec.db_name, r[0]) for r in rows}
 
     def close(self) -> None:
+        """End the held meta session and remove the CSVs ``read_table``
+        wrote. Spark scans those files lazily, so a frame from
+        ``read_table``/``open_latest`` must be consumed before this."""
         self._meta.close()
+        shutil.rmtree(self._read_dir, ignore_errors=True)

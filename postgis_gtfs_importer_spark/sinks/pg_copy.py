@@ -1,21 +1,18 @@
-"""PostgreSQL COPY sink — the bulk-load fast path.
+"""PostgreSQL COPY sink — the bulk-load path.
 
 The reference loads via psql reading a generated ``COPY FROM stdin`` stream
-(/root/reference/import.sh:124-132). Spark's JDBC writer uses batched
-INSERTs (`reWriteBatchedInserts` narrows but does not close the gap);
-SURVEY §4 flags the swap-in: if JDBC measures >2× off the COPY baseline,
-replace the writer with a ``foreachPartition`` psycopg2 ``COPY FROM
-STDIN`` — same interface, different wire protocol.
+(import.sh:124-132). The loader here is the same shape:
+``copy_lines_expr`` builds each row's COPY text-format line in the JVM,
+and ``copy_lines_psql`` streams each partition of those lines through
+one ``psql`` COPY child, executor-side, so N partitions load in parallel.
 
-``rows_to_copy_text`` (pure, unit-testable without a server) implements
-the COPY text-format escaping; ``copy_dataframe`` streams each partition
-through one COPY statement, executor-side, so N partitions load in
-parallel exactly like ``numPartitions`` JDBC writers — but at COPY speed.
+``rows_to_copy_text`` (pure, unit-testable without a server) is the
+reference serializer of the COPY text-format escaping; the tests check
+``copy_lines_expr`` against it.
 """
 
 from __future__ import annotations
 
-import io
 from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame
@@ -48,111 +45,22 @@ def rows_to_copy_text(rows: Iterable, n_cols: int) -> Iterator[str]:
         yield "\t".join(_field(row[i]) for i in range(n_cols)) + "\n"
 
 
-def copy_partition(
-    rows: Iterable,
-    n_cols: int,
-    dsn: str,
-    table: str,
-    columns: list[str],
-    buffer_rows: int = 10_000,
-) -> int:
-    """Load one partition via COPY FROM STDIN. Returns rows written.
-
-    Runs executor-side inside foreachPartition — one connection + one
-    COPY per partition, buffered in ``buffer_rows`` chunks.
-    """
-    import psycopg2
-
-    # Pin the session timezone: COPY text carries NAIVE timestamps that
-    # this engine's contract defines as UTC instants; a timestamptz
-    # target column interprets them in the SESSION timezone, so an
-    # unpinned connection on a Europe/Berlin server would store every
-    # instant shifted by the server offset. The psql wire path pins the
-    # same way via PGTZ=UTC (sinks/psql_exec._env).
-    con = psycopg2.connect(dsn, options="-c timezone=UTC")
-    written = 0
-    try:
-        with con, con.cursor() as cur:
-            buf = io.StringIO()
-            col_list = ", ".join(f'"{c}"' for c in columns)
-            sql = f'COPY {table} ({col_list}) FROM STDIN'
-            pending = 0
-            for line in rows_to_copy_text(rows, n_cols):
-                buf.write(line)
-                pending += 1
-                written += 1
-                if pending >= buffer_rows:
-                    buf.seek(0)
-                    cur.copy_expert(sql, buf)
-                    buf = io.StringIO()
-                    pending = 0
-            if pending:
-                buf.seek(0)
-                cur.copy_expert(sql, buf)
-    finally:
-        con.close()
-    return written
-
-
-def copy_dataframe(df: DataFrame, dsn: str, table: str) -> None:
-    """Parallel COPY load: one COPY stream per partition.
-
-    The DataFrame should already be flattened (sinks.postgis._flatten_for_jdbc)
-    and repartitioned to the desired load parallelism.
-    """
-    columns = list(df.columns)
-    n = len(columns)
-
-    def load(it):
-        copy_partition(it, n, dsn, table, columns)
-
-    df.foreachPartition(load)
-
-
-def copy_dataframe_psql(
-    df: DataFrame,
-    host: str,
-    port: int,
-    user: str,
-    dbname: str,
-    table: str,
-) -> None:
-    """Parallel COPY load through psql children — no Python driver needed
-    (the reference's own load path, ``… | psql`` import.sh:124-132).
-
-    One psql subprocess per partition, executor-side: N partitions load
-    concurrently at COPY speed. The frame must already be flattened.
-    """
-    from .psql_exec import copy_into
-
-    columns = list(df.columns)
-    n = len(columns)
-
-    def load(it):
-        copy_into(
-            host, port, user, dbname, table, columns,
-            rows_to_copy_text(it, n),
-        )
-
-    df.foreachPartition(load)
-
-
 def copy_lines_expr(df: DataFrame) -> "DataFrame":
     """Project a flattened frame to ONE string column holding its COPY
     text-format line (without the trailing newline), built entirely in
     the JVM (whole-stage codegen).
 
-    The row-at-a-time path (``rows_to_copy_text`` under
+    Serializing in Python instead (``rows_to_copy_text`` under
     ``foreachPartition``) ships every typed field across the JVM→Python
-    boundary and string-formats it per field in Python — at the bulk
-    load's row counts that boundary, not the COPY wire, dominates (r11,
-    guide §4). This builder produces a bit-compatible COPY stream with
+    boundary and string-formats it per field — at the bulk load's row
+    counts that boundary, not the COPY wire, dominated (r11, guide §4).
+    This builder produces a bit-compatible COPY stream with
     Spark SQL expressions: NULL → ``\\N``, boolean → t/f, strings
     escaped (backslash first, then tab/newline/carriage-return), every
     other atomic type via its string cast. Numeric surface forms may
     differ from Python's ``str()`` (``1.0E7`` vs ``10000000.0``) but
     parse to identical stored values; timestamps format in the session
-    timezone, the same clock the Python path's datetimes carry, and the
+    timezone, the same clock ``rows_to_copy_text``'s datetimes carry, and the
     COPY wire pins PGTZ=UTC either way (``psql_exec._env``).
     """
     from pyspark.sql import functions as F

@@ -1,21 +1,19 @@
-"""PostGIS snapshot sink — JDBC bulk load + spatial DDL (C6/C18/§4).
+"""PostGIS snapshot sink — table DDL, type mapping + spatial DDL (C6/C18/§4).
 
-Replaces the reference's ``gtfs-to-sql … | psql`` COPY stream
-(/root/reference/import.sh:124-132) with Spark's parallel JDBC writer into
-the freshly minted snapshot DB. Cross-table atomicity is NOT provided here
+The bulk load itself is ``PsqlCatalog.write_tables``: it creates each
+table from ``spark_schema_to_pg_ddl``, streams the rows through
+``sinks.pg_copy.copy_lines_expr`` + ``copy_lines_psql`` (the reference's
+``gtfs-to-sql … | psql`` COPY stream, import.sh:124-132),
+then runs ``post_load_ddl``. Cross-table atomicity is NOT provided here
 — exactly as in the reference, atomicity comes from the DB-per-import
 snapshot + bookkeeping pointer flip (SURVEY §2.C18): a failed write aborts
 the pipeline before the pointer moves.
 
 Spatial parity (C6, ``--stops-location-index`` import.sh:126): geometry is
 materialized PG-side by post-load DDL — Spark ships ``(lon, lat)`` doubles
-/ WKT strings, then ``ALTER TABLE … ADD COLUMN … generated`` +
+/ WKT strings, then ``ALTER TABLE … ADD COLUMN … geography`` +
 ``CREATE INDEX … GIST`` run over the catalog connection. Indexes are
 created AFTER the bulk load (SURVEY §4 "PK/FK/index creation at load").
-
-If measured >2× off the COPY baseline, the sink swaps the JDBC writer for
-a ``foreachPartition`` psycopg2 ``COPY FROM STDIN`` without changing the
-interface — flagged in SURVEY §4 as an implementation detail.
 """
 
 from __future__ import annotations
@@ -119,35 +117,8 @@ def post_load_ddl(
     return stmts
 
 
-def write_snapshot(
-    catalog,
-    db_name: str,
-    tables: dict[str, DataFrame],
-    schema: str = "public",
-    num_partitions: int = 8,
-    partition_by: dict[str, list[str]] | None = None,
-) -> None:
-    """Write all tables into the snapshot DB, then apply post-load DDL.
-
-    Array/struct columns (shape polylines, service-day sets) are flattened
-    to WKT/JSON at this boundary — the reference's model is deliberately
-    flat (SURVEY §1.2) and PostGIS gets the same flat shape.
-    """
-    url = catalog._jdbc_url(db_name)
-    for name, df in tables.items():
-        flat = _flatten_for_jdbc(df)
-        (
-            flat.repartition(num_partitions)
-            .write.mode("append")
-            .options(**catalog._jdbc_opts)
-            .jdbc(url, f"{schema}.{name}")
-        )
-    for stmt in post_load_ddl(set(tables), schema, partition_by):
-        catalog.execute_sql(db_name, stmt)
-
-
 #: Spark typeName -> PostgreSQL column type (flattened frames only —
-#: array/struct/map become JSON text via _flatten_for_jdbc first).
+#: array/struct/map become JSON text via _flatten_nested first).
 #: TimestampType holds UTC instants; they land in timestamptz with
 #: PGTZ=UTC on the COPY wire (sinks.psql_exec).
 _PG_TYPES = {
@@ -186,7 +157,7 @@ def spark_schema_to_pg_ddl(
     return f'CREATE TABLE {pg_schema}."{table}" ({", ".join(cols)})'
 
 
-def _flatten_for_jdbc(df: DataFrame) -> DataFrame:
+def _flatten_nested(df: DataFrame) -> DataFrame:
     """Serialize array/struct columns to JSON strings for the row store."""
     from pyspark.sql import functions as F
 

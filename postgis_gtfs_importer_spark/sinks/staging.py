@@ -4,7 +4,7 @@ The reference buffers the entire generated SQL stream, compressed, before
 the load transaction opens (``gtfs-to-sql | zstd | sponge | zstd -d |
 psql``, /root/reference/import.sh:131): conversion time never holds the
 Postgres transaction open. The Spark analog: materialize every table to
-zstd Parquet, then open the (JDBC) load reading the staged files — load
+zstd Parquet, then open the COPY load reading the staged files — load
 wall-time ≈ pure write time, retries re-read the staging dir instead of
 recomputing the plan, and executor loss during the load costs nothing.
 """

@@ -40,7 +40,7 @@ def merge_stream_into(
     ``read_target()`` returns the current target (or None before first
     write); ``write_target(df, batch_id)`` persists the merged result —
     the two callables keep the storage layer (LocalCatalog parquet,
-    JDBC, Delta) out of the streaming logic.
+    a PostgreSQL table, Delta) out of the streaming logic.
 
     A micro-batch may carry several changes for one pk (burst updates,
     or a replay folding multiple files into one batch). Which one wins

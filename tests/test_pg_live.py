@@ -447,14 +447,86 @@ def test_schema_targeting_live(spark, pg_server):
         cat.close()
 
 
+def test_read_table_files_removed_on_close_live(spark, pg_server):
+    """read_table exports each table to a CSV that Spark scans lazily;
+    the catalog keeps those files until close() and then removes them
+    (open_latest writes one per table, on every call)."""
+    import os
+    from urllib.parse import urlparse
+
+    cat = PsqlCatalog(spark, **pg_server)
+    db = "gtfs_readtmp"
+    try:
+        cat.create_database(db)
+        _psql(pg_server, db, "CREATE TABLE t AS SELECT 1 AS x")
+        df = cat.read_table(db, "t")
+        assert df.count() == 1
+        written = [urlparse(f).path for f in df.inputFiles()]
+        assert written and all(os.path.exists(f) for f in written)
+    finally:
+        try:
+            cat.drop_database(db)
+        finally:
+            cat.close()
+    assert not any(os.path.exists(f) for f in written)
+
+
+def test_cli_imports_into_live_postgres_from_env(
+    spark, catalog, pg_server, tmp_path, monkeypatch, capsys
+):
+    """A21/A25: the CLI publishes into PostgreSQL (through PsqlCatalog)
+    configured by environment variables alone, and an unchanged feed is
+    skipped on the next run without a new database."""
+    from postgis_gtfs_importer_spark import __main__ as cli
+
+    feed = write_feed_zip(str(tmp_path / "served.zip"))
+    monkeypatch.setenv("GTFS_DOWNLOAD_URL", f"file://{feed}")
+    monkeypatch.setenv("GTFS_DOWNLOAD_USER_AGENT", "test-agent")
+    monkeypatch.setenv("GTFS_IMPORTER_DB_PREFIX", PREFIX.rstrip("_"))
+    monkeypatch.setenv("GTFS_TMP_DIR", str(tmp_path / "work"))
+    monkeypatch.setenv("PGHOST", pg_server["host"])
+    monkeypatch.setenv("PGPORT", str(pg_server["port"]))
+    monkeypatch.setenv("PGUSER", pg_server["user"])
+    for name in ("PGDATABASE", "PATH_TO_DSN_FILE", "GTFS_POSTPROCESSING_D_PATH"):
+        monkeypatch.delenv(name, raising=False)
+    # main() reaches this session through getOrCreate: keep it running,
+    # and undo the SQL confs get_spark re-applies to it
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    conf = dict(spark.conf.getAll)
+    try:
+        cli.main()
+        rec = catalog.latest_import(PREFIX)
+        assert rec is not None
+        assert catalog.read_table(rec.db_name, "stops").count() > 0
+        dbs = catalog.list_databases(PREFIX)
+        assert dbs == [rec.db_name]
+
+        capsys.readouterr()
+        cli.main()
+        assert "import_skipped=True" in capsys.readouterr().out
+        assert catalog.list_databases(PREFIX) == dbs
+        assert catalog.latest_import(PREFIX) == rec
+    finally:
+        for k, v in dict(spark.conf.getAll).items():
+            if conf.get(k) != v and spark.conf.isModifiable(k):
+                if k in conf:
+                    spark.conf.set(k, conf[k])
+                else:
+                    spark.conf.unset(k)
+
+
 def test_copy_sink_throughput_floor_live(spark, catalog, pg_server):
-    """C17 sink benchmark (SURVEY §4 'swap-in COPY if JDBC >2x off'):
-    measure the parallel psql-COPY path on a real table and assert a
-    conservative throughput floor. Prints the measured rate so rounds
-    can compare (recorded in docs/SCALE.md)."""
+    """C17 sink benchmark: time the loader PsqlCatalog.write_tables uses
+    (copy_lines_expr + copy_lines_psql, one psql COPY child per
+    partition) on a real table and assert a conservative throughput
+    floor. Prints the measured rate so rounds can compare (recorded in
+    docs/SCALE.md)."""
     import time
 
-    from postgis_gtfs_importer_spark.sinks.pg_copy import copy_dataframe_psql
+    from postgis_gtfs_importer_spark.sinks.pg_copy import (
+        copy_lines_expr,
+        copy_lines_psql,
+    )
     from postgis_gtfs_importer_spark.sinks.postgis import spark_schema_to_pg_ddl
     from postgis_gtfs_importer_spark.sources.tables import load_table
 
@@ -467,9 +539,9 @@ def test_copy_sink_throughput_floor_live(spark, catalog, pg_server):
     try:
         _psql(pg_server, db, spark_schema_to_pg_ddl("lineitem", li.schema))
         t0 = time.monotonic()
-        copy_dataframe_psql(
-            li, host=pg_server["host"], port=pg_server["port"],
-            user=pg_server["user"], dbname=db, table='public."lineitem"',
+        copy_lines_psql(
+            copy_lines_expr(li), pg_server["host"], pg_server["port"],
+            pg_server["user"], db, 'public."lineitem"', list(li.columns),
         )
         elapsed = time.monotonic() - t0
         assert int(_psql(pg_server, db, "SELECT count(*) FROM lineitem")[0]) == n

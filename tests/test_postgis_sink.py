@@ -1,5 +1,5 @@
 """Golden tests for the Postgres-facing SQL/DDL surface (C6/C8/C9) and
-the PostgresCatalog write signature — everything that can be verified
+the catalogs' write signature — everything that can be verified
 without a live server. The live-server end-to-end lives in
 tests/test_pg_live.py (skipped when no Postgres is available)."""
 
@@ -45,14 +45,14 @@ def test_post_load_ddl_empty():
     assert post_load_ddl({"nation"}) == []  # no spatial/PK/partition entries
 
 
-def test_postgres_catalog_write_tables_accepts_partition_by():
+def test_catalog_write_tables_accepts_partition_by():
     """run_import always passes partition_by= (plans/pipeline.py default
     partitions arrivals_departures by date); every catalog backend must
     accept the kwarg or the PG path dies with TypeError after CREATE
     DATABASE."""
-    from postgis_gtfs_importer_spark.catalog import LocalCatalog, PostgresCatalog
+    from postgis_gtfs_importer_spark.catalog import LocalCatalog, PsqlCatalog
 
-    for backend in (PostgresCatalog, LocalCatalog):
+    for backend in (PsqlCatalog, LocalCatalog):
         sig = inspect.signature(backend.write_tables)
         assert "partition_by" in sig.parameters, backend.__name__
         assert sig.parameters["partition_by"].default is None
