@@ -9,10 +9,10 @@ import.sh:50-100). Order matters and follows gtfsclean's internal
 sequencing: validate/default → dedup+remap (agencies → routes →
 services/shapes → stops → trips) → orphan fixpoint → minimizers.
 
-All operators are DataFrame built-ins (joins/windows/aggregates) except
-B7 shape simplification, whose Douglas-Peucker core is a grouped-map
-Pandas UDF (the one place per-shape imperative geometry is genuinely
-needed).
+All operators are DataFrame built-ins (joins/windows/aggregates); B7
+shape simplification runs its iterative Douglas-Peucker loop as SQL
+higher-order functions over each shape's collected points, so cleaning
+starts no Python worker.
 """
 
 from __future__ import annotations
@@ -101,13 +101,36 @@ def apply_enum_policy(tables: Tables, cfg: CleaningConfig) -> Tables:
     return out
 
 
+def _has_value(fname: str, colname: str):
+    """The field holds a value: not NULL and, for a double (a
+    coordinate), finite. ``try_cast`` reads the strings ``NaN`` and
+    ``Infinity`` as non-finite doubles, which locate nothing, so they
+    count as missing."""
+    c = F.col(colname)
+    if schemas.GTFS_FILES.get(fname, {}).get(colname) != "double":
+        return c.isNotNull()
+    return c.isNotNull() & ~F.isnan(c) & (F.abs(c) != float("inf"))
+
+
+def _null_or_zero_coords():
+    """B4's error: a stop with a missing or non-finite coordinate, or
+    at (0, 0)."""
+    lat, lon = F.col("stop_lat"), F.col("stop_lon")
+    return (
+        ~_has_value("stops", "stop_lat")
+        | ~_has_value("stops", "stop_lon")
+        | ((lat == 0.0) & (lon == 0.0))
+    )
+
+
 def drop_invalid_rows(tables: Tables, cfg: CleaningConfig) -> Tables:
     """B3 drop-errors + B4 null-coordinate check.
 
     Rows missing required (NOT NULL) fields are dropped (gtfsclean
     --drop-errs, import.sh:56-58); stops with missing or (0,0)
     coordinates are treated as errors (--check-null-coords,
-    import.sh:59-61). Cascading deletion of referencing entities is the
+    import.sh:59-61). A non-finite coordinate counts as a missing one
+    in both checks. Cascading deletion of referencing entities is the
     orphan fixpoint's job (B10) — run after this.
     """
     if not cfg.drop_errors:
@@ -118,15 +141,12 @@ def drop_invalid_rows(tables: Tables, cfg: CleaningConfig) -> Tables:
             continue
         pred = None
         for c in req:
-            p = F.col(c).isNotNull()
+            p = _has_value(fname, c)
             pred = p if pred is None else (pred & p)
         before = out[fname]
         out[fname] = before.filter(pred)
     if cfg.check_null_coords and "stops" in out:
-        lat, lon = F.col("stop_lat"), F.col("stop_lon")
-        out["stops"] = out["stops"].filter(
-            lat.isNotNull() & lon.isNotNull() & ~((lat == 0.0) & (lon == 0.0))
-        )
+        out["stops"] = out["stops"].filter(~_null_or_zero_coords())
     if "stop_times" in out:
         # a stop_time with no parseable arrival AND departure is useless
         out["stop_times"] = out["stop_times"].filter(
@@ -158,16 +178,13 @@ def validation_report(tables: Tables) -> DataFrame:
             continue
         pred = None
         for c in req:
-            p = F.col(c).isNull()
+            p = ~_has_value(fname, c)
             pred = p if pred is None else (pred | p)
         rule(f"{fname}.missing_required", tables[fname].filter(pred))
     if "stops" in tables:
-        lat, lon = F.col("stop_lat"), F.col("stop_lon")
         rule(
             "stops.null_or_zero_coords",
-            tables["stops"].filter(
-                lat.isNull() | lon.isNull() | ((lat == 0.0) & (lon == 0.0))
-            ),
+            tables["stops"].filter(_null_or_zero_coords()),
         )
     for (fname, colname), (domain, _default) in schemas.ENUM_DOMAINS.items():
         if fname not in tables:
@@ -178,7 +195,10 @@ def validation_report(tables: Tables) -> DataFrame:
             tables[fname].filter(col.isNotNull() & ~col.isin(*domain)),
         )
     if not parts:
-        return spark.createDataFrame([], "rule string, n_violations long")
+        return spark.range(0).select(
+            F.lit(None).cast("string").alias("rule"),
+            F.lit(None).cast("long").alias("n_violations"),
+        )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -789,56 +809,128 @@ def minimize_stop_times(tables: Tables) -> Tables:
 
 
 # ---------------------------------------------------------------------------
-# B7 — shape simplification (Douglas-Peucker, grouped-map Pandas UDF)
+# B7 — shape simplification (Douglas-Peucker as SQL higher-order functions)
 # ---------------------------------------------------------------------------
+
+def _let(value, state, body):
+    """``body(value)`` with ``value`` evaluated once: a one-element
+    ``aggregate`` binds it. ``state`` is the fold state ``body`` returns
+    a new value of (it also fixes the result type)."""
+    return F.aggregate(F.array(value), state, lambda _, v: body(v))
+
+
+def _douglas_peucker_keep(pts, tolerance_deg: float):
+    """Indices (0-based) of the points of ``pts`` — one shape's points,
+    sorted by ``shape_pt_sequence`` — that iterative Douglas-Peucker
+    keeps: both endpoints, and every point farther than the tolerance
+    from the chord of the segment it splits.
+
+    The loop is an ``aggregate`` over ``sequence(1, 2n)``, enough steps
+    for any shape: each step pops one (i, j) segment off an explicit
+    stack and either discards it or pushes its two halves, and at most
+    n - 2 segments split. A step whose stack is empty keeps the state.
+    Each segment's chord constants are bound once per step (``_let``),
+    not recomputed per candidate point. The farthest point is the
+    ``array_max`` of ``struct(dist, -k)``: on equal distances the first
+    point wins, as with ``np.argmax``."""
+    n = F.size(pts)
+
+    def lat(k):
+        return F.get(pts, k)["shape_pt_lat"]
+
+    def lon(k):
+        return F.get(pts, k)["shape_pt_lon"]
+
+    def segment(i, j):
+        return F.struct(i.alias("i"), j.alias("j"))
+
+    def step(s, _):
+        stack, keep = s["stack"], s["keep"]
+        rest = F.slice(stack, 1, F.size(stack) - 1)
+        pop = F.struct(rest.alias("stack"), keep.alias("keep"))
+
+        def split_at(i, j, chord):
+            def dist(k):
+                rx, ry = lat(k) - chord["x0"], lon(k) - chord["y0"]
+                return F.when(chord["len"] == 0, F.hypot(rx, ry)).otherwise(
+                    F.abs(rx * chord["dy"] - ry * chord["dx"]) / chord["len"]
+                )
+
+            farthest = F.array_max(F.transform(
+                F.sequence(i + 1, j - 1),
+                lambda k: F.struct(dist(k).alias("dist"), (-k).alias("neg_k")),
+            ))
+
+            def keep_or_drop(m):
+                mid = -m["neg_k"]
+                split = F.struct(
+                    F.concat(rest, F.array(segment(i, mid), segment(mid, j)))
+                    .alias("stack"),
+                    F.concat(keep, F.array(mid)).alias("keep"),
+                )
+                return F.when(m["dist"] > tolerance_deg, split).otherwise(pop)
+
+            return _let(farthest, s, keep_or_drop)
+
+        def on_segment(top):
+            i, j = top["i"], top["j"]
+            dx, dy = lat(j) - lat(i), lon(j) - lon(i)
+            chord = F.struct(
+                lat(i).alias("x0"), lon(i).alias("y0"),
+                dx.alias("dx"), dy.alias("dy"), F.hypot(dx, dy).alias("len"),
+            )
+            return F.when(j <= i + 1, pop).otherwise(
+                _let(chord, s, lambda c: split_at(i, j, c))
+            )
+
+        return F.when(F.size(stack) == 0, s).otherwise(
+            _let(F.element_at(stack, -1), s, on_segment)
+        )
+
+    first = F.lit(0)
+    init = F.struct(
+        F.array(segment(first, n - 1)).alias("stack"),
+        F.array(first, n - 1).alias("keep"),
+    )
+    return F.when(n <= 2, F.sequence(first, n - 1)).otherwise(
+        F.aggregate(F.sequence(F.lit(1), 2 * n), init, step)["keep"]
+    )
+
 
 def simplify_shapes(tables: Tables, tolerance_deg: float = 1e-5) -> Tables:
     """B7 (--min-shapes, import.sh:71-73): polyline simplification per
     shape, preserving endpoints and max perpendicular deviation ≤
     tolerance.
 
-    Iterative Douglas-Peucker on numpy arrays inside applyInPandas —
-    per-shape imperative geometry that column expressions can't express;
-    Arrow-batched, one group per shape_id, shuffle keyed on shape_id.
+    Iterative Douglas-Peucker in the JVM: each shape's points are
+    collected (one shuffle keyed on shape_id) and sorted by
+    shape_pt_sequence, ``_douglas_peucker_keep`` picks the points to
+    keep, and those explode back into rows of the input schema.
     """
     if "shapes" not in tables:
         return tables
-    import pandas as pd  # noqa: F401  (applyInPandas contract)
-
-    def dp(pdf):
-        import numpy as np
-
-        pdf = pdf.sort_values("shape_pt_sequence").reset_index(drop=True)
-        pts = pdf[["shape_pt_lat", "shape_pt_lon"]].to_numpy(dtype=float)
-        n = len(pts)
-        if n <= 2:
-            return pdf
-        keep = np.zeros(n, dtype=bool)
-        keep[0] = keep[-1] = True
-        stack = [(0, n - 1)]
-        while stack:
-            i, j = stack.pop()
-            if j <= i + 1:
-                continue
-            seg = pts[j] - pts[i]
-            seg_len = np.hypot(*seg)
-            rel = pts[i + 1 : j] - pts[i]
-            if seg_len == 0:
-                dist = np.hypot(rel[:, 0], rel[:, 1])
-            else:
-                dist = np.abs(rel[:, 0] * seg[1] - rel[:, 1] * seg[0]) / seg_len
-            k = int(np.argmax(dist))
-            if dist[k] > tolerance_deg:
-                mid = i + 1 + k
-                keep[mid] = True
-                stack.append((i, mid))
-                stack.append((mid, j))
-        return pdf[keep]
-
-    out = dict(tables)
-    out["shapes"] = out["shapes"].groupBy("shape_id").applyInPandas(
-        dp, schema=out["shapes"].schema
+    shapes = tables["shapes"]
+    # shape_pt_sequence first: array_sort orders structs field by field
+    fields = ["shape_pt_sequence"] + [
+        c for c in shapes.columns if c not in ("shape_id", "shape_pt_sequence")
+    ]
+    pts = F.col("pts")
+    kept = (
+        shapes.groupBy("shape_id")
+        .agg(F.array_sort(F.collect_list(F.struct(*fields))).alias("pts"))
+        .select(
+            "shape_id",
+            F.explode(F.transform(
+                _douglas_peucker_keep(pts, tolerance_deg),
+                lambda k: F.get(pts, k),
+            )).alias("p"),
+        )
     )
+    out = dict(tables)
+    out["shapes"] = kept.select(*(
+        F.col(c) if c == "shape_id" else F.col("p")[c].alias(c)
+        for c in shapes.columns
+    ))
     return out
 
 

@@ -37,11 +37,15 @@ def _opt(tables: Tables, name: str) -> DataFrame:
     legal for every non-required table). The derivation then degrades to
     its natural empty result instead of raising KeyError mid-pipeline;
     found by the degraded-feed sweep (tests/test_gtfs_adversarial_feeds)
-    on a required-files-only feed."""
+    on a required-files-only feed. Built over ``range(0)``, not from a
+    local list, so it starts no Python worker."""
     if name in tables:
         return tables[name]
     any_df = next(iter(tables.values()))
-    return any_df.sparkSession.createDataFrame([], schemas.typed_schema(name))
+    return any_df.sparkSession.range(0).select(
+        *(F.lit(None).cast(f.dataType).alias(f.name)
+          for f in schemas.typed_schema(name).fields)
+    )
 
 _DOW_COLS = ["monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]
 

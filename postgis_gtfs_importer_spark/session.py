@@ -4,8 +4,8 @@ Local-mode defaults tuned for the test/bench harness (local[N] on one JVM);
 the same builder settings are what we would ship for a real cluster, minus
 the ``master`` override: AQE on (runtime re-planning, skew-join splitting,
 partition coalescing), UTC session timezone (required for DuckDB-oracle
-comparison — DuckDB timestamps are UTC-naive), Arrow enabled for the few
-Pandas-UDF operators.
+comparison — DuckDB timestamps are UTC-naive), Arrow enabled for the
+query operators that run Pandas UDFs (the publish path runs none).
 
 The generated-code cache is sized to the working set. Spark keeps the
 classes whole-stage and expression codegen compile in an LRU of
@@ -63,6 +63,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """The process's session: the running one, untouched, when it exists
+    (``getOrCreate`` would re-apply this builder's runtime SQL confs to
+    it, e.g. reset a caller's ``spark.sql.shuffle.partitions`` to the
+    core count); otherwise a new one built with the settings below."""
+    running = SparkSession._instantiatedSession
+    if running is not None and running._sc._jsc is not None:
+        return running
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)

@@ -3,8 +3,9 @@
 The reference loads via psql reading a generated ``COPY FROM stdin`` stream
 (import.sh:124-132). The loader here is the same shape:
 ``copy_lines_expr`` builds each row's COPY text-format line in the JVM,
-and ``copy_lines_psql`` streams each partition of those lines through
-one ``psql`` COPY child, executor-side, so N partitions load in parallel.
+and ``copy_lines_psql`` pipes each partition of those lines from the JVM
+into one ``psql`` COPY child, executor-side, so N partitions load in
+parallel and the load starts no Python worker.
 
 ``rows_to_copy_text`` (pure, unit-testable without a server) is the
 reference serializer of the COPY text-format escaping; the tests check
@@ -50,10 +51,10 @@ def copy_lines_expr(df: DataFrame) -> "DataFrame":
     text-format line (without the trailing newline), built entirely in
     the JVM (whole-stage codegen).
 
-    Serializing in Python instead (``rows_to_copy_text`` under
-    ``foreachPartition``) ships every typed field across the JVM→Python
-    boundary and string-formats it per field — at the bulk load's row
-    counts that boundary, not the COPY wire, dominated (r11, guide §4).
+    Serializing in Python instead (``rows_to_copy_text`` in a Python
+    worker) ships every typed field across the JVM→Python boundary and
+    string-formats it per field — at the bulk load's row counts that
+    boundary, not the COPY wire, dominated (r11, guide §4).
     This builder produces a bit-compatible COPY stream with
     Spark SQL expressions: NULL → ``\\N``, boolean → t/f, strings
     escaped (backslash first, then tab/newline/carriage-return), every
@@ -91,14 +92,43 @@ def copy_lines_psql(
     columns: list[str],
 ) -> None:
     """Parallel COPY load of a pre-built single-column line frame (from
-    ``copy_lines_expr``): only one short string per row crosses into
-    Python, and the per-field formatting ran under codegen upstream."""
-    from .psql_exec import copy_into
+    ``copy_lines_expr``), entirely in the JVM: each partition of the
+    lines, viewed as a ``Dataset[String]``, is piped (``RDD.pipe``,
+    UTF-8, one line per row) into one ``psql -c "COPY … FROM STDIN"``
+    child, so no row crosses into a Python worker.
 
-    def load(it):
-        copy_into(
-            host, port, user, dbname, table, columns,
-            (row[0] + "\n" for row in it),
-        )
+    Every partition starts a child, empty ones too (an empty COPY stream
+    loads zero rows). A zero-row table loaded by
+    ``PsqlCatalog.write_tables`` starts one child: AQE coalesces its
+    empty rebalance to one partition (counted with a logging ``psql``
+    wrapper first on ``PATH``, for ``range(0)`` and for a filter that
+    keeps no row).
 
-    lines.foreachPartition(load)
+    The child gets the ``PG*`` variables of ``psql_exec._env()``; the
+    password reaches it only as ``PGPASSWORD`` there, never on the
+    command line, which Spark prints when the child fails. A failed
+    child (non-zero exit) fails the job, raised here as
+    :class:`~.psql_exec.PsqlError` naming the table; psql's own message
+    goes to the JVM's stderr.
+    """
+    from py4j.protocol import Py4JJavaError
+
+    from .psql_exec import PsqlError, _base_args, _env
+
+    col_list = ", ".join(f'"{c}"' for c in columns)
+    cmd = _base_args(host, port, user, dbname) + [
+        "-c", f"COPY {table} ({col_list}) FROM STDIN",
+    ]
+    env = {k: v for k, v in _env().items() if k.startswith("PG")}
+    jvm = lines.sparkSession._jvm
+    strings = getattr(lines._jdf, "as")(jvm.org.apache.spark.sql.Encoders.STRING())
+    try:
+        # psql -q prints nothing for a COPY, so the count only drives the
+        # pipe; a non-zero exit raises from the task
+        strings.toJavaRDD().pipe(cmd, env, False, 1 << 16, "UTF-8").count()
+    except Py4JJavaError as e:
+        raise PsqlError(
+            sqlstate="",
+            message=f"COPY into {table} failed: "
+            + str(e.java_exception.getMessage())[:500],
+        ) from e

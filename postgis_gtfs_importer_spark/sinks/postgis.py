@@ -65,13 +65,18 @@ PRIMARY_KEYS = {
 
 def import_metadata_row(spark, feed_digest: str, imported_at: int) -> DataFrame:
     """C7 ``--import-metadata``: one-row provenance table written into every
-    snapshot (engine version, feed digest, import timestamp)."""
+    snapshot (engine version, feed digest, import timestamp). Built from
+    literals over ``range(1)``: a frame made from a local Python list
+    would start Python workers in the middle of the publish."""
+    from pyspark.sql import functions as F
+
     from .. import __version__
 
-    return spark.createDataFrame(
-        [(__version__, spark.version, feed_digest, imported_at)],
-        "importer_version string, spark_version string, feed_digest string,"
-        " imported_at long",
+    return spark.range(1).select(
+        F.lit(__version__).alias("importer_version"),
+        F.lit(spark.version).alias("spark_version"),
+        F.lit(feed_digest).alias("feed_digest"),
+        F.lit(imported_at).cast("long").alias("imported_at"),
     )
 
 

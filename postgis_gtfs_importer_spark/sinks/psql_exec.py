@@ -16,8 +16,11 @@ dependencies:
     create/drop run outside any transaction, import.js:115-118).
   * :func:`psql_script` — ``psql -1 -v ON_ERROR_STOP=1 -f -``:
     the postprocessing-hook semantics (import.sh:141).
-  * :func:`copy_into` — ``COPY table FROM STDIN`` through a psql child;
-    called per partition from executors (sinks.pg_copy serializes).
+
+The bulk load (``COPY table FROM STDIN``) is not here: Spark pipes each
+partition's COPY lines from the JVM into a psql child
+(``sinks.pg_copy.copy_lines_psql``), with the ``PG*`` variables of
+:func:`_env`.
 
 All helpers force ``PGTZ=UTC`` so timestamp text written by Spark (UTC
 instants, session timezone UTC) round-trips into ``timestamptz``
@@ -29,7 +32,6 @@ from __future__ import annotations
 import itertools
 import os
 import subprocess
-from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 #: unit separator — never appears in bookkeeping values; safe field sep
@@ -164,49 +166,3 @@ def psql_script(
     )
     if out.returncode != 0:
         raise PsqlError(sqlstate="", message=out.stderr.strip()[:500])
-
-
-def copy_into(
-    host: str,
-    port: int,
-    user: str,
-    dbname: str,
-    table: str,
-    columns: list[str],
-    lines: Iterable[str],
-) -> int:
-    """Stream COPY text-format lines into ``table`` via one psql child —
-    the ``gtfs-to-sql … | psql`` fast path (import.sh:124-132). Returns
-    the number of lines written. Runs executor-side (one child per
-    non-empty partition: an empty ``lines`` starts no child and
-    returns 0)."""
-    lines = iter(lines)
-    first = next(lines, None)
-    if first is None:
-        return 0
-    col_list = ", ".join(f'"{c}"' for c in columns)
-    cmd = _base_args(host, port, user, dbname) + [
-        "-c", f'COPY {table} ({col_list}) FROM STDIN',
-    ]
-    proc = subprocess.Popen(
-        cmd,
-        stdin=subprocess.PIPE,
-        stdout=subprocess.DEVNULL,
-        stderr=subprocess.PIPE,
-        text=True,
-        env=_env(),
-    )
-    n = 0
-    assert proc.stdin is not None and proc.stderr is not None
-    try:
-        for line in itertools.chain((first,), lines):
-            proc.stdin.write(line)
-            n += 1
-        proc.stdin.close()
-    except BrokenPipeError:  # pragma: no cover - surfaced via returncode
-        pass
-    err = proc.stderr.read()
-    proc.wait(timeout=600)
-    if proc.returncode != 0:
-        raise PsqlError(sqlstate="", message=(err or "").strip()[:500])
-    return n

@@ -138,9 +138,12 @@ def write_feed_dir(path: str, files: dict[str, str] | None = None) -> str:
 
 
 def write_feed_zip(zip_path: str, files: dict[str, str] | None = None) -> str:
+    """The files as a zip whose bytes depend on the files alone: every
+    entry carries the same fixed timestamp, not the write time, so two
+    writes of one feed have one feed digest."""
     with zipfile.ZipFile(zip_path, "w") as z:
         for fname, content in (files or FEED_FILES).items():
-            z.writestr(fname, content)
+            z.writestr(zipfile.ZipInfo(fname, date_time=(1980, 1, 1, 0, 0, 0)), content)
     return zip_path
 
 

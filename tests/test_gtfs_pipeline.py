@@ -317,6 +317,41 @@ def test_validation_report_counts(feed):
     assert "trips.missing_required" not in report
 
 
+def test_non_finite_coordinates_count_as_missing(spark, feed, tmp_path):
+    """``NaN`` and ``Infinity`` parse as doubles but locate nothing: B3
+    drops shape points holding them, B4 drops such stops, the report
+    counts them, and the cleaned feed equals the one without them."""
+    from .gtfs_fixtures import FEED_FILES
+
+    files = dict(FEED_FILES)
+    files["stops.txt"] += (
+        "SNAN,CN,Not a Number,NaN,13.4000,0,,0,\n"
+        "SINF,CI,Far Away,52.5000,-Infinity,0,,0,\n"
+    )
+    files["shapes.txt"] += "SH1,NaN,13.4000,5,4.0\nSH2,52.5000,Infinity,5,4.0\n"
+    bad = GF.read_feed(spark, write_feed_dir(str(tmp_path / "bad"), files))
+    assert bad["shapes"].filter(F.isnan("shape_pt_lat")).count() == 1
+    assert bad["stops"].filter(F.col("stop_lon") == float("-inf")).count() == 1
+
+    report = {r.rule: r.n_violations for r in CL.validation_report(bad).collect()}
+    assert report["stops.null_or_zero_coords"] == 4  # SNULL SZERO SNAN SINF
+    assert report["shapes.missing_required"] == 2
+
+    cfg = CL.CleaningConfig()
+    dropped = CL.drop_invalid_rows(bad, cfg)
+    assert {r.stop_id for r in dropped["stops"].collect()} == {
+        r.stop_id for r in CL.drop_invalid_rows(feed, cfg)["stops"].collect()
+    }
+    assert dropped["shapes"].filter(F.col("shape_pt_sequence") == 5).count() == 0
+
+    def rows(tables, name):
+        return sorted(tuple(r) for r in tables[name].collect())
+
+    cleaned, reference = CL.clean_feed(bad, cfg), CL.clean_feed(feed, cfg)
+    for name in ("stops", "shapes"):
+        assert rows(cleaned, name) == rows(reference, name)
+
+
 #: Spark jobs to clean, derive and write every table of the fixture feed.
 #: Measured at local[8]: 292 while each table's lineage barrier re-ran
 #: the dedup mappings, the orphan pass's trips/stops and

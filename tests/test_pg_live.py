@@ -489,30 +489,141 @@ def test_cli_imports_into_live_postgres_from_env(
     monkeypatch.setenv("PGUSER", pg_server["user"])
     for name in ("PGDATABASE", "PATH_TO_DSN_FILE", "GTFS_POSTPROCESSING_D_PATH"):
         monkeypatch.delenv(name, raising=False)
-    # main() reaches this session through getOrCreate: keep it running,
-    # and undo the SQL confs get_spark re-applies to it
+    # main() gets this session back from get_spark: keep it running
     monkeypatch.setattr(spark, "stop", lambda: None)
-    conf = dict(spark.conf.getAll)
-    try:
-        cli.main()
-        rec = catalog.latest_import(PREFIX)
-        assert rec is not None
-        assert catalog.read_table(rec.db_name, "stops").count() > 0
-        dbs = catalog.list_databases(PREFIX)
-        assert dbs == [rec.db_name]
+    cli.main()
+    rec = catalog.latest_import(PREFIX)
+    assert rec is not None
+    assert catalog.read_table(rec.db_name, "stops").count() > 0
+    dbs = catalog.list_databases(PREFIX)
+    assert dbs == [rec.db_name]
 
-        capsys.readouterr()
-        cli.main()
-        assert "import_skipped=True" in capsys.readouterr().out
-        assert catalog.list_databases(PREFIX) == dbs
-        assert catalog.latest_import(PREFIX) == rec
-    finally:
-        for k, v in dict(spark.conf.getAll).items():
-            if conf.get(k) != v and spark.conf.isModifiable(k):
-                if k in conf:
-                    spark.conf.set(k, conf[k])
-                else:
-                    spark.conf.unset(k)
+    capsys.readouterr()
+    cli.main()
+    assert "import_skipped=True" in capsys.readouterr().out
+    assert catalog.list_databases(PREFIX) == dbs
+    assert catalog.latest_import(PREFIX) == rec
+
+
+def test_zero_row_table_publishes_empty_live(spark, catalog, pg_server):
+    """A table with no rows publishes as an empty table: its COPY stream
+    carries nothing, and the snapshot still has the table."""
+    res = import_gtfs_atomically(
+        spark, catalog, db_prefix=PREFIX, feed_digest="e0e0e0",
+        build_tables=lambda s, _db: {
+            "nothing": s.range(0).selectExpr("id", "cast(id AS string) AS s"),
+            "filtered": s.range(100).filter("id < 0"),
+        },
+        now=make_clock(),
+    )
+    db = res.new_import["db_name"]
+    for table in ("nothing", "filtered"):
+        assert _psql(pg_server, db, f"SELECT count(*) FROM {table}") == ["0"]
+    assert catalog.latest_import(PREFIX).db_name == db
+
+
+def test_rejected_copy_fails_import_before_flip_live(spark, catalog, pg_server):
+    """A COPY that PostgreSQL rejects (``text`` refuses U+0000) fails the
+    import with a PsqlError naming the table, before the pointer flip:
+    no bookkeeping row is written."""
+    from pyspark.sql import functions as F
+
+    from postgis_gtfs_importer_spark.sinks.psql_exec import PsqlError
+
+    with pytest.raises(PsqlError, match='public."bad"'):
+        import_gtfs_atomically(
+            spark, catalog, db_prefix=PREFIX, feed_digest="00bad0",
+            build_tables=lambda s, _db: {
+                "bad": s.range(3).select(
+                    "id", F.concat(F.lit("a"), F.char(F.lit(0)), F.lit("b")).alias("s")
+                )
+            },
+            now=make_clock(),
+        )
+    assert catalog.list_recorded_imports(PREFIX) == []
+    assert catalog.latest_import(PREFIX) is None
+
+
+#: run in a fresh interpreter: publish the fixture feed, then report the
+#: JVM's child processes and load one zero-row table
+_FRESH_PUBLISH = """
+import json, subprocess, sys
+from postgis_gtfs_importer_spark.catalog import PsqlCatalog
+from postgis_gtfs_importer_spark.plans.pipeline import run_import
+from postgis_gtfs_importer_spark.session import get_spark
+
+zip_path, work, host, port = sys.argv[1:5]
+spark = get_spark(app_name="fresh-publish")
+cat = PsqlCatalog(spark, host=host, port=int(port), user="postgres")
+try:
+    res = run_import(spark, cat, db_prefix="gtfs_", zip_path=zip_path,
+                     extract_dir=work)
+    jvm = spark.sparkContext._gateway.proc.pid
+    procs = [
+        line.split(None, 2)
+        for line in subprocess.run(
+            ["ps", "-e", "-o", "pid=,ppid=,args="],
+            capture_output=True, text=True, check=True,
+        ).stdout.splitlines()
+    ]
+    children = [args for pid, ppid, args in procs if int(ppid) == jvm]
+    cat.create_database("gtfs_zero_rows")
+    cat.write_tables("gtfs_zero_rows", {"zero": spark.range(0)})
+    print(json.dumps({
+        "db": res.new_import["db_name"],
+        "jvm_alive": any(int(pid) == jvm for pid, _, _ in procs),
+        "children": children,
+    }))
+finally:
+    cat.close()
+    spark.stop()
+"""
+
+
+def test_fresh_process_publish_starts_no_python_worker_live(
+    catalog, pg_server, tmp_path
+):
+    """A publish runs in the JVM and in psql alone: in a fresh
+    interpreter, publishing the fixture feed through PsqlCatalog leaves
+    no ``pyspark.daemon`` child of the JVM (a Python worker hop would
+    have started one). A ``psql`` wrapper first on PATH logs each psql
+    start, so the zero-row table's COPY children are counted too."""
+    import json
+    import os
+    import pathlib
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    bindir, log = tmp_path / "bin", tmp_path / "psql.log"
+    bindir.mkdir()
+    wrapper = bindir / "psql"
+    wrapper.write_text(
+        f"#!/bin/sh\nprintf '%s\\n' \"$*\" >> {log}\n"
+        f"exec {shutil.which('psql')} \"$@\"\n"
+    )
+    wrapper.chmod(0o755)
+    env = dict(
+        os.environ,
+        PATH=f"{bindir}{os.pathsep}{os.environ['PATH']}",
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    zip_path = write_feed_zip(str(tmp_path / "feed.zip"))
+    proc = subprocess.run(
+        [sys.executable, "-c", _FRESH_PUBLISH, zip_path, str(tmp_path / "x"),
+         pg_server["host"], str(pg_server["port"])],
+        capture_output=True, text=True, env=env, cwd=repo, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["jvm_alive"]
+    assert not [c for c in out["children"] if "pyspark.daemon" in c], out
+    assert int(_psql(pg_server, out["db"], "SELECT count(*) FROM stops")[0]) > 0
+    copies = log.read_text().splitlines()
+    assert any("COPY public.\"stops\"" in c for c in copies)
+    # a zero-row table starts one COPY child (see copy_lines_psql)
+    assert sum('COPY public."zero"' in c for c in copies) == 1
+    assert _psql(pg_server, "gtfs_zero_rows", "SELECT count(*) FROM zero") == ["0"]
 
 
 def test_copy_sink_throughput_floor_live(spark, catalog, pg_server):

@@ -165,16 +165,3 @@ def test_copy_lines_expr_matches_python_serializer(spark):
             pa = dt.datetime.strptime(a.split(".")[0], fmt)
             pb = dt.datetime.strptime(b.split(".")[0], fmt)
             assert pa == pb
-
-
-def test_copy_into_empty_stream_starts_no_psql():
-    """An empty partition is a no-op: ``copy_into`` returns 0 before it
-    starts a psql child, so a host that does not resolve, a missing psql
-    binary, or an unreachable server cannot fail it."""
-    from postgis_gtfs_importer_spark.sinks import psql_exec
-
-    n = psql_exec.copy_into(
-        "unreachable.invalid", 1, "nobody", "nodb", 'public."t"', ["a"],
-        iter(()),
-    )
-    assert n == 0

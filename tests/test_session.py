@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from perfbench.workloads import QUERY_LIGHT
 from postgis_gtfs_importer_spark.plans import queries as Q
+from postgis_gtfs_importer_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -32,3 +33,17 @@ def test_repeated_queries_reuse_generated_classes(spark):
     before = _classes_compiled(spark)
     run_all()
     assert _classes_compiled(spark) - before == 0
+
+
+def test_get_spark_returns_running_session_untouched(spark, monkeypatch):
+    """A second ``get_spark`` in a process hands back the running session
+    without re-applying its own confs: the caller's shuffle partitions
+    stay, whatever core count the environment now names."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    try:
+        assert get_spark(app_name="gtfs-import") is spark
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)

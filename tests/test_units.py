@@ -66,6 +66,22 @@ def test_digest_parity_with_reference_semantics(tmp_path):
     assert composite_feed_digest(str(z), str(ppd)) != d_no_dir
 
 
+def test_fixture_zip_digest_independent_of_write_time(tmp_path, monkeypatch):
+    """Two writes of the same fixture files, an hour apart, give the same
+    bytes and so the same feed digest."""
+    import time
+
+    from .gtfs_fixtures import write_feed_zip
+
+    clock = time.time()
+    digests = []
+    for n in range(2):
+        monkeypatch.setattr(time, "time", lambda: clock + 3600 * n)
+        z = write_feed_zip(str(tmp_path / f"feed{n}.zip"))
+        digests.append(composite_feed_digest(z, None))
+    assert digests[0] == digests[1]
+
+
 def test_cleaning_config_from_env():
     assert CleaningConfig.from_env({"GTFSTIDY_BEFORE_IMPORT": "false"}) is None
     cfg = CleaningConfig.from_env(
